@@ -216,31 +216,13 @@ def rebuild_tables(
     ).localCheckpoint()
     nodes = needed_nodes.join(maybe_bcast(frontier.node_ids), "id", "leftsemi")
 
-    coords = pipe.prepare_coords(needed_nodes)
-    tables: dict[str, list[DataFrame]] = {}
-    # The four builders are independent given the materialized prunes, and
-    # each contains lazy pins whose non-final stages AQE materializes AT
-    # CONSTRUCTION — built serially, those stage chains run one builder at
-    # a time. Constructing them from a small pool overlaps the chains
-    # (guide §2.6 — the same concurrent-submission pattern as the runner's
-    # state pins): probe at 32 replicas/500 changes measured the parts
-    # wall 12-16 s serial vs ~10 s threaded. pipe._expr races at worst
-    # rebuild an identical Column tree (last write wins — all values
-    # equal); part ORDER stays deterministic via the futures list.
-    from concurrent.futures import ThreadPoolExecutor
-
-    builders = (
-        lambda: pipe.relation_member_tables(rels, needed_ways, needed_nodes),
-        lambda: pipe.relation_tables(rels, needed_ways, coords),
-        lambda: pipe.way_tables(ways, coords),
-        lambda: pipe.node_tables(nodes),
+    # concurrent builder construction (build_tables): a probe at 32
+    # replicas/500 changes measured the parts wall 12-16 s serial vs ~10 s
+    # threaded
+    return pipe.build_tables(
+        rels, ways, nodes, pipe.prepare_coords(needed_nodes),
+        member_ways=needed_ways, member_nodes=needed_nodes,
     )
-    with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-        parts = [f.result() for f in [pool.submit(b) for b in builders]]
-    for part in parts:
-        for name, df in part.items():
-            tables.setdefault(name, []).append(df)
-    return {name: _union_all(dfs) for name, dfs in tables.items()}
 
 
 def _resolve_latlon(ways: DataFrame, nodes: DataFrame, keep_cols: list[str]) -> DataFrame:

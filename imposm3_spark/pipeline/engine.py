@@ -12,6 +12,7 @@ PostGIS payload.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import pandas as pd
@@ -81,6 +82,7 @@ MULTIPOLYGON_SCHEMA = (
     "minx double, miny double, maxx double, maxy double, "
     "outer_way_ids array<bigint>"
 )
+_MULTIPOLYGON_COLUMNS = [f.split()[0] for f in MULTIPOLYGON_SCHEMA.split(", ")]
 
 
 def _assemble_multipolygons(max_ring_gap: float, srid: int, limiter=None):
@@ -97,6 +99,10 @@ def _assemble_multipolygons(max_ring_gap: float, srid: int, limiter=None):
 
     def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         rel_id = key[0]
+        if pdf["coords"].isna().any():
+            # a missing member way or an unresolvable ref drops the whole
+            # relation (writer/relations.go:80-99)
+            return pd.DataFrame(columns=_MULTIPOLYGON_COLUMNS)
         pdf = pdf.sort_values("member_pos")
         # direct column access, not iterrows: this kernel is the single
         # Python hot spot of the import path (one call per relation)
@@ -125,15 +131,11 @@ def _assemble_multipolygons(max_ring_gap: float, srid: int, limiter=None):
             expanded.sort(key=lambda r: -r.area)
             polygons, outer_ids = py_geom.build_multipolygon(expanded)
         except (py_geom.NoRingError, ValueError):
-            return pd.DataFrame(columns=[
-                "rel_id", "wkb", "area", "minx", "miny", "maxx", "maxy", "outer_way_ids",
-            ])
+            return pd.DataFrame(columns=_MULTIPOLYGON_COLUMNS)
         if limiter is not None:
             polygons = limiter.clip_polygons(polygons)
             if not polygons:
-                return pd.DataFrame(columns=[
-                    "rel_id", "wkb", "area", "minx", "miny", "maxx", "maxy", "outer_way_ids",
-                ])
+                return pd.DataFrame(columns=_MULTIPOLYGON_COLUMNS)
         if len(polygons) == 1:
             wkb = wkblib.polygon_wkb(polygons[0], srid)
         else:
@@ -589,6 +591,8 @@ class ImportPipeline:
 
         Any relation with an unresolvable way member (or a member way with
         an unresolvable ref) is dropped whole (writer/relations.go:80-99).
+        Member ways are resolved in one pinned pass that every completeness
+        decision and the assembly read.
         """
         poly_units = self.polygon_units
         rel_units = self.relation_units
@@ -601,70 +605,42 @@ class ImportPipeline:
         df = self._with_matches(df, all_units, "rel")
         needed = df.filter(self._any_match(all_units, "rel"))
 
-        # J2: member ways; completeness in two stages
+        # J2 + J3 in one pass (writer/relations.go:80-116 resolves each
+        # member way once before building): every way member row carries
+        # its refs and coords, and coords is NULL when the way is missing
+        # or has an unresolvable ref (cache/ways.go:99-114). Relations with
+        # zero way members (e.g. route masters) have no rows here and stay
+        # complete.
         members = needed.select(
             F.col("id").alias("rel_id"), F.posexplode("members").alias("member_pos", "member")
-        ).filter(F.col("member.type") == 1)
+        ).filter(F.col("member.type") == 1).select(
+            "rel_id", "member_pos", F.col("member.id").alias("way_id")
+        )
         member_ways = members.join(
-            ways.select(
-                F.col("id").alias("way_id"),
-                F.col("refs").alias("way_refs"),
-            ),
-            members["member.id"] == F.col("way_id"),
-            "left",
+            ways.select(F.col("id").alias("way_id"), F.col("refs").alias("way_refs")),
+            on="way_id",
+            how="left",
         )
-
-        # J3: fill member way coords. A relation is dropped only when one of
-        # its WAY members is missing or has an unresolvable ref
-        # (cache/ways.go:99-114, writer/relations.go:80-99) — relations with
-        # zero way members (e.g. route masters) stay complete.
-        mw = member_ways.filter(F.col("way_id").isNotNull()).select(
-            "rel_id", "member_pos", F.col("way_id").alias("id"), F.col("way_refs").alias("refs")
-        )
-        mw_resolved = (
-            resolve_way_coords(mw, coords, keep_cols=["rel_id", "member_pos", "refs"])
-            .withColumnRenamed("id", "way_id")
-            .withColumnRenamed("refs", "way_refs")
-        )
-        bad_missing_way = member_ways.filter(F.col("way_id").isNull()).select("rel_id")
-        bad_unresolved = (
-            mw.groupBy("rel_id")
-            .agg(F.count("*").alias("_n_ways"))
-            .join(
-                mw_resolved.groupBy("rel_id").agg(F.count("*").alias("_n_resolved")),
-                on="rel_id",
-                how="left",
-            )
-            .filter(F.col("_n_ways") != F.coalesce(F.col("_n_resolved"), F.lit(0)))
-            .select("rel_id")
-        )
-        bad = bad_missing_way.unionByName(bad_unresolved)
-        complete_ids = needed.select(F.col("id").alias("rel_id")).join(
-            bad, on="rel_id", how="left_anti"
-        )
-
-        assembled = (
-            mw_resolved.join(complete_ids, on="rel_id", how="leftsemi")
-            .groupBy("rel_id")
-            .applyInPandas(
-                _assemble_multipolygons(self.max_ring_gap, self.srid, self.limiter),
-                MULTIPOLYGON_SCHEMA,
-            )
-        )
-
-        complete_rels = self._pin(
-            needed.join(
-                complete_ids.withColumnRenamed("rel_id", "id"), on="id", how="leftsemi"
-            )
+        # a missing way's NULL refs explode to no row, so it gets no coords
+        distinct_ways = member_ways.select(
+            F.col("way_id").alias("id"), F.col("way_refs").alias("refs")
+        ).dropDuplicates(["id"])
+        way_coords = resolve_way_coords(distinct_ways, coords, keep_cols=["id"], unique_ids=True)
+        member_ways = self._pin(
+            member_ways.join(way_coords.withColumnRenamed("id", "way_id"), on="way_id", how="left")
         )
 
         out: dict[str, list[DataFrame]] = {}
         # polygon tables (handleMultiPolygon)
         if poly_units:
+            # the kernel returns no row for a relation with a NULL coords
+            # member, so the inner join keeps complete relations only
+            assembled = member_ways.groupBy("rel_id").applyInPandas(
+                _assemble_multipolygons(self.max_ring_gap, self.srid, self.limiter),
+                MULTIPOLYGON_SCHEMA,
+            )
             with_geom = self._pin(
-                complete_rels.join(
-                    assembled, complete_rels["id"] == assembled["rel_id"], "inner"
-                )
+                needed.join(assembled, needed["id"] == assembled["rel_id"], "inner")
             )
             for i, unit in enumerate(poly_units):
                 m = F.col(self._match_col(i))
@@ -687,6 +663,11 @@ class ImportPipeline:
                 )
 
         # relation tables (handleRelation — empty geometry)
+        if rel_units:
+            incomplete = member_ways.filter(F.col("coords").isNull()).select(
+                F.col("rel_id").alias("id")
+            )
+            complete_rels = self._pin(needed.join(incomplete, on="id", how="left_anti"))
         for j, unit in enumerate(rel_units):
             m = F.col(self._match_col(len(poly_units) + j))
             matched = complete_rels.filter(m.isNotNull()).filter(
@@ -846,20 +827,51 @@ class ImportPipeline:
         """All nodes (tagged + untagged) as projected (id, x, y)."""
         return self.project_xy(nodes).select("id", "x", "y")
 
+    def build_tables(
+        self,
+        relations: DataFrame,
+        ways: DataFrame,
+        nodes: DataFrame,
+        coords: DataFrame,
+        member_ways: DataFrame | None = None,
+        member_nodes: DataFrame | None = None,
+    ) -> dict[str, DataFrame]:
+        """All four table builders, each table's parts unioned.
+
+        ``member_ways``/``member_nodes`` are what relation members resolve
+        against (default ``ways``/``nodes``): a diff batch passes the
+        closure of its frontier there and only the frontier itself as
+        ``ways``/``nodes``. ``coords`` must cover every ref of
+        ``member_ways``.
+
+        The builders are independent, and each holds lazy pins whose
+        shuffle stages AQE materializes while the builder is constructed.
+        Built serially, those stage chains run one builder at a time, so
+        they are built from a small pool instead and the chains overlap.
+        Concurrent ``_expr`` misses at worst build an identical Column tree
+        twice; the part order stays fixed by the futures list.
+        """
+        member_ways = ways if member_ways is None else member_ways
+        member_nodes = nodes if member_nodes is None else member_nodes
+        builders = (
+            lambda: self.relation_member_tables(relations, member_ways, member_nodes, coords=coords),
+            lambda: self.relation_tables(relations, member_ways, coords),
+            lambda: self.way_tables(ways, coords),
+            lambda: self.node_tables(nodes),
+        )
+        with ThreadPoolExecutor(max_workers=len(builders)) as pool:
+            parts = [f.result() for f in [pool.submit(b) for b in builders]]
+        tables: dict[str, list[DataFrame]] = {}
+        for part in parts:
+            for name, df in part.items():
+                tables.setdefault(name, []).append(df)
+        return {name: _union_all(dfs) for name, dfs in tables.items()}
+
     def run(
         self, nodes: DataFrame, ways: DataFrame, relations: DataFrame
     ) -> dict[str, DataFrame]:
         coords = self._pin(self.prepare_coords(nodes))
-        tables: dict[str, list[DataFrame]] = {}
-        for part in (
-            self.relation_member_tables(relations, ways, nodes, coords=coords),
-            self.relation_tables(relations, ways, coords),
-            self.way_tables(ways, coords),
-            self.node_tables(nodes),
-        ):
-            for name, df in part.items():
-                tables.setdefault(name, []).append(df)
-        return {name: _union_all(dfs) for name, dfs in tables.items()}
+        return self.build_tables(relations, ways, nodes, coords)
 
 
 def _union_all(dfs: list[DataFrame]) -> DataFrame:

@@ -5,13 +5,16 @@ lookups (cache/delta.go:162-198 FillWay, cache/ways.go:99-114 FillMembers).
 In Spark these are bulk equi-joins:
 
   J1  posexplode(refs) ⋈ coords on node id → regroup ordered by position
-  J2  explode(members) where type=1 ⋈ ways on way id
-  J3  J1 applied to member ways
+  J2  explode(members) where type=1 ⟕ ways on way id (for refs)
+  J3  J1 applied once to the DISTINCT member ways, left-joined back
   J4  explode(members) ⋈ nodes/coords/relations for relation_member rows
 
 Completeness semantics are inner-ish: ANY missing ref drops the whole way
 (FillWay returns NotFound → writer skips); any missing member way drops the
-whole relation (writer/relations.go:80-99).
+whole relation (writer/relations.go:80-99). J2 and J3 run as one pass
+(ImportPipeline.relation_tables): the outer joins leave one member-way
+frame whose coords are NULL exactly where the way is missing or has an
+unresolvable ref, and every completeness decision reads that frame.
 
 Scale notes: the exploded ref table is the biggest shuffle of the whole
 import (≈ #node-refs rows ~ 8x #nodes on a planet file). We shuffle only
@@ -70,33 +73,3 @@ def resolve_way_coords(
         return complete
     return ways.select("id", *[c for c in keep_cols if c != "id"]).join(complete, on="id", how="inner")
 
-
-def explode_way_members(relations: DataFrame) -> DataFrame:
-    """(rel_id, member_pos, member) for way members (type=1)."""
-    return relations.select(
-        F.col("id").alias("rel_id"),
-        F.posexplode("members").alias("member_pos", "member"),
-    ).filter(F.col("member.type") == 1)
-
-
-def resolve_member_ways(relations: DataFrame, ways: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """J2: resolve way members to (rel_id, member_pos, way_id, refs, way_tags).
-
-    Returns (resolved, complete_rel_ids). A relation with ANY unresolved way
-    member is dropped from complete_rel_ids (writer/relations.go:80-86).
-    """
-    members = explode_way_members(relations)
-    resolved = members.join(
-        ways.select(
-            F.col("id").alias("way_id"),
-            F.col("refs").alias("way_refs"),
-            F.col("tags").alias("way_tags"),
-        ),
-        members["member.id"] == F.col("way_id"),
-        "left",
-    )
-    status = resolved.groupBy("rel_id").agg(
-        (F.count("*") == F.count("way_id")).alias("_complete")
-    )
-    complete_ids = status.filter("_complete").select("rel_id")
-    return resolved.filter(F.col("way_id").isNotNull()), complete_ids

@@ -27,6 +27,7 @@ from __future__ import annotations
 import io
 import subprocess
 from collections.abc import Iterable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -399,7 +400,25 @@ def write_jdbc(df: DataFrame, table: Table, cfg: PostGISConfig, jdbc_url: str,
     )
 
 
+# concurrent parquet table writes; each is one Spark job, so a handful is
+# enough to keep the scheduler busy without one thread per table
+_MAX_CONCURRENT_WRITES = 8
+
+
 def write_parquet(tables: dict[str, DataFrame], path: str, mode: str = "overwrite") -> None:
-    """Parquet sink for offline pipelines: one directory per output table."""
-    for name, df in tables.items():
-        df.write.mode(mode).parquet(f"{path}/{name}")
+    """Parquet sink for offline pipelines: one directory per output table.
+
+    The per-table writes are independent jobs, each too small to fill the
+    cluster on its own, so they are submitted concurrently. Every write
+    runs to its end; then the first failure in table order is raised.
+    """
+    if not tables:
+        return
+    with ThreadPoolExecutor(max_workers=min(len(tables), _MAX_CONCURRENT_WRITES)) as pool:
+        futures = [
+            pool.submit(df.write.mode(mode).parquet, f"{path}/{name}")
+            for name, df in tables.items()
+        ]
+    # leaving the pool waited for every write
+    for f in futures:
+        f.result()
