@@ -4,7 +4,7 @@ The import bench covers parse→match→resolve→sink and the curate bench
 covers the datapipe; this module times the reference's raison d'être —
 the incremental update loop (update/process.go:23-317): N OsmChange
 sequence files applied through `diff/runner.ReplicationRunner`, i.e.
-last-write-wins state upsert (T4), old∪new frontier computation (T3),
+last-write-wins state upsert (T4), old-state frontier walk (T3),
 delete-before-insert table rebuild on the frontier via the import
 pipeline (T2/T5), per-id generalized-table refresh (T6), tile expiry
 (T7), and the exactly-once state checkpoint (T8).

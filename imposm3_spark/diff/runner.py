@@ -30,11 +30,11 @@ from pyspark.sql import DataFrame, SparkSession
 from imposm3_spark.diff.update import (
     OsmState,
     apply_batch,
-    apply_changes_to_state,
-    compute_frontier,
+    expired_tile_list,
+    pin_state_and_frontier,
 )
 from imposm3_spark.pipeline.engine import ImportPipeline
-from imposm3_spark.sources.osm_xml import read_osc_xml
+from imposm3_spark.sources.osm_xml import CHANGE_SCHEMA, read_osc_rows
 
 
 def parse_state_txt(text: str) -> dict[str, str]:
@@ -55,6 +55,15 @@ def write_state_txt(path: str | Path, sequence: int, timestamp: str | None = Non
     tmp = Path(str(path) + "~")
     tmp.write_text(f"timestamp={ts}\nsequenceNumber={sequence}\n")
     tmp.rename(path)
+
+
+def _pin_all(frames: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """localCheckpoint independent frames concurrently: each pin is a small
+    job, and serial submission pays one scheduler round trip per frame
+    where one suffices on an idle cluster."""
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        futs = {n: pool.submit(df.localCheckpoint) for n, df in frames.items()}
+        return {n: f.result() for n, f in futs.items()}
 
 
 def sequence_path(diff_dir: str | Path, seq: int) -> Path | None:
@@ -110,51 +119,36 @@ class ReplicationRunner:
             return False
         # Stage walls for observability (imposm3_spark/benchdiff.py reads
         # them): each key marks where the LAZY batch plan actually
-        # executes — expire at tiles.collect(), state/tables/gens at their
-        # localCheckpoints, store at the durable save.
+        # executes — state at the change-set pin and the concurrent
+        # state and frontier pins; frontier at the broadcast gate only
+        # (no job below the gate); rebuild at the engine's shared-frontier
+        # pins; tables/gens at their localCheckpoints; expire (concurrent
+        # with rebuild and tables) at its geometry collect; store at the
+        # durable save.
         stage_secs: dict[str, float] = {}
         t0 = time.perf_counter()
-        changes = read_osc_xml(self.spark, path)
+        rows = read_osc_rows(path)
+        changes = self.spark.createDataFrame(rows, CHANGE_SCHEMA)
         stage_secs["read"] = round(time.perf_counter() - t0, 3)
 
-        # Pin the upserted state and the frontier FIRST: every downstream
-        # consumer (rebuild semi-joins, delete anti-joins, expiry branches,
-        # gen refresh) references them several times, and Spark re-executes
-        # an unpinned subtree once per referencing branch. Pinning here
-        # (tiny jobs — state upsert is an anti-join+union over the already-
-        # checkpointed previous state; the frontier is the batch's blast
-        # radius) turned round-10 benchdiff's per-batch wall from ~190 s
-        # to single-digit seconds at 32 Monaco replicas. The previous
-        # ordering checkpointed state AFTER expiry, so expiry's six
-        # branches each re-ran the upsert joins, and the frontier was
-        # computed twice (once inside apply_batch, once for expiry).
+        # Broadcast-hint gate (round-10 ADVICE): the hints assume a
+        # blast-radius-bounded batch, but batch size is input-controlled
+        # (catch-up replication, mass edits). Normal batches pay NOTHING
+        # here (the parsed row count is known on the driver); a
+        # catch-up-sized batch sort-merges its state anti joins and
+        # frontier walk, then pays three tiny count jobs on the pinned
+        # frontier frames and, if any side could exceed the broadcastable
+        # bound, drops every downstream hint so the joins degrade to
+        # sort-merge instead of OOMing the driver. Residual (documented):
+        # a pathological fan-out from FEW changes is not gated — it is
+        # bounded by the state's max ways-per-node fan-in.
+        small = len(rows) <= int(os.environ.get("SPARK_GRAFT_DIFF_GATE", "100000"))
         t0 = time.perf_counter()
-        new_state = apply_changes_to_state(self.state, changes)
-        # the three state pins are independent — submit them concurrently
-        # (each is a small job; serial submission pays three scheduler
-        # round-trips where one suffices on an idle cluster)
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            n_f, w_f, r_f = (
-                pool.submit(new_state.nodes.localCheckpoint),
-                pool.submit(new_state.ways.localCheckpoint),
-                pool.submit(new_state.relations.localCheckpoint),
-            )
-            new_state = OsmState(n_f.result(), w_f.result(), r_f.result())
+        new_state, frontier = pin_state_and_frontier(self.state, changes, hint=small)
         stage_secs["state"] = round(time.perf_counter() - t0, 3)
         t0 = time.perf_counter()
-        frontier = compute_frontier(self.state, new_state, changes, pin=True)
-        # Broadcast-hint gate (round-10 ADVICE): the frontier-side hints
-        # assume a blast-radius-bounded batch, but batch size is
-        # input-controlled (catch-up replication, mass edits). Normal
-        # batches pay NOTHING here (changes is a driver-side LocalRelation
-        # — count() is no job); a catch-up-sized batch pays three tiny
-        # count jobs on the pinned frontier frames and, if any side could
-        # exceed the broadcastable bound, drops every hint so the joins
-        # degrade to sort-merge instead of OOMing the driver. Residual
-        # (documented): a pathological fan-out from FEW changes is not
-        # gated — it is bounded by the state's max ways-per-node fan-in.
-        hint = True
-        if changes.count() > int(os.environ.get("SPARK_GRAFT_DIFF_GATE", "100000")):
+        hint = small
+        if not small:
             limit = int(os.environ.get("SPARK_GRAFT_DIFF_BROADCAST_LIMIT", "4000000"))
             hint = all(
                 df.count() <= limit
@@ -162,59 +156,50 @@ class ReplicationRunner:
             )
         stage_secs["frontier"] = round(time.perf_counter() - t0, 3)
 
-        t0 = time.perf_counter()
-        _, new_tables, affected = apply_batch(
-            self.pipe,
-            self.state,
-            self.tables,
-            changes,
-            with_affected=True,
-            new_state=new_state,
-            frontier=frontier,
-            hint=hint,
-        )
-        # plan construction + the engine's shared-frontier pins (the
-        # rebuilt rows themselves materialize under "tables")
-        stage_secs["rebuild"] = round(time.perf_counter() - t0, 3)
+        old_state = self.state
         expire_future = None
         expire_pool = None
         try:
             if self.expire_dir is not None:
                 # expiry depends only on (state, new_state, frontier) — all
-                # pinned above — so it runs CONCURRENTLY with the table pins
-                # below (guide §2.6); its wall is still recorded separately.
+                # pinned above — so it runs CONCURRENTLY with the rebuild
+                # and the table pins below; its wall is still recorded
+                # separately.
                 def _expire() -> float:
-                    from imposm3_spark.diff.update import expired_tiles_for_batch
-                    from imposm3_spark.expire.tiles import TileExpireList
-
                     t0 = time.perf_counter()
-                    tiles = expired_tiles_for_batch(
+                    expired_tile_list(
                         self.pipe,
-                        self.state,
+                        old_state,
                         new_state,
                         frontier,
                         max_zoom=self.expire_zoom,
                         hint=hint,
-                    )
-                    tl = TileExpireList(max_zoom=self.expire_zoom)
-                    for r in tiles.collect():
-                        tl.tiles.setdefault(r["z"], set()).add((r["x"], r["y"]))
-                    tl.flush(self.expire_dir)
+                    ).flush(self.expire_dir)
                     return round(time.perf_counter() - t0, 3)
 
                 expire_pool = ThreadPoolExecutor(max_workers=1)
                 expire_future = expire_pool.submit(_expire)
             t0 = time.perf_counter()
-            # per-table pins are independent jobs — overlap them (same
-            # concurrent-submission pattern as the import bench's sink writes)
-            with ThreadPoolExecutor(max_workers=8) as pool:
-                futs = {n: pool.submit(df.localCheckpoint) for n, df in new_tables.items()}
-                new_tables = {n: f.result() for n, f in futs.items()}
+            _, new_tables, affected = apply_batch(
+                self.pipe,
+                old_state,
+                self.tables,
+                changes,
+                with_affected=True,
+                new_state=new_state,
+                frontier=frontier,
+                hint=hint,
+            )
+            # plan construction + the engine's shared-frontier pins (the
+            # rebuilt rows themselves materialize under "tables")
+            stage_secs["rebuild"] = round(time.perf_counter() - t0, 3)
+            t0 = time.perf_counter()
+            new_tables = _pin_all(new_tables)
             stage_secs["tables"] = round(time.perf_counter() - t0, 3)
         finally:
             # the expire pool must not leak (and its future must be
-            # awaited) even when a table pin raises mid-batch
-            # (round-10 ADVICE)
+            # awaited) even when the rebuild or a table pin raises
+            # mid-batch (round-10 ADVICE)
             if expire_pool is not None:
                 if expire_future is not None:
                     stage_secs["expire"] = expire_future.result()
@@ -224,10 +209,9 @@ class ReplicationRunner:
             from imposm3_spark.pipeline.generalize import refresh_generalized_tables
 
             t0 = time.perf_counter()
-            new_gens = refresh_generalized_tables(
-                self.pipe.mapping, self.gens, new_tables, affected
+            self.gens = _pin_all(
+                refresh_generalized_tables(self.pipe.mapping, self.gens, new_tables, affected)
             )
-            self.gens = {n: df.localCheckpoint() for n, df in new_gens.items()}
             stage_secs["gens"] = round(time.perf_counter() - t0, 3)
         self.state = new_state
         self.tables = new_tables

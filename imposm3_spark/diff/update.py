@@ -6,9 +6,10 @@ Semantics ported:
 - delete-before-insert: every changed element's rows are removed from all
   output tables before rebuilt rows are inserted (T2, update/deleter.go)
 - cascading invalidation: a changed node rebuilds referencing ways and
-  relations; a changed way rebuilds referencing relations — computed
-  against the union of OLD and NEW reference indexes so both the previous
-  and the new geometry owners are refreshed (T3, update/process.go:220-259)
+  relations; a changed way rebuilds referencing relations — both the
+  previous and the new geometry owners are refreshed (T3,
+  update/process.go:220-259); the new owners are either old owners or
+  changed elements themselves, so the walk reads the OLD state only
 - the rebuild reuses the exact import pipeline on the affected subset (T5)
 
 Spark shape: a batch is pure DataFrame algebra — anti-join + union for
@@ -19,6 +20,7 @@ be Delta/parquet at scale (here: in-memory DataFrames, .persist()ed).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
@@ -26,6 +28,7 @@ from pyspark.sql import functions as F
 
 from imposm3_spark import elements as el
 from imposm3_spark.diff import refindex as ri
+from imposm3_spark.expire.tiles import TileExpireList
 from imposm3_spark.pipeline.engine import ImportPipeline, _union_all
 
 
@@ -41,29 +44,59 @@ class OsmState:
         return OsmState(self.nodes.persist(), self.ways.persist(), self.relations.persist())
 
 
-def _last_change_per_id(changes: DataFrame, kind: str) -> DataFrame:
-    ch = changes.filter(F.col("kind") == kind)
-    w = Window.partitionBy(F.col(kind)["id"]).orderBy(F.desc("pos"))
-    return ch.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+def latest_changes(changes: DataFrame) -> DataFrame:
+    """T1: the last change per element (last-write-wins within the batch),
+    one window over (kind, id). Every (kind, id) appears once, so the id
+    sets selected from it need no distinct."""
+    eid = F.coalesce(F.col("node.id"), F.col("way.id"), F.col("relation.id"))
+    w = Window.partitionBy("kind", eid).orderBy(F.desc("pos"))
+    return changes.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
 
 
-def apply_changes_to_state(state: OsmState, changes: DataFrame) -> OsmState:
-    """New element snapshot after the batch (T4)."""
+def _changed_ids(latest: DataFrame, kind: str) -> DataFrame:
+    return latest.filter(F.col("kind") == kind).select(F.col(kind)["id"].alias("id"))
+
+
+def _bounded(replaced: DataFrame, union: DataFrame) -> DataFrame:
+    """``union`` (a kept ∪ rebuilt frame that replaces ``replaced``)
+    coalesced to ``replaced``'s partition count. A broadcast anti join
+    keeps its streamed side's partitioning, so without this every batch
+    adds the rebuilt side's partitions and, after a day of minutely
+    batches, every pin runs thousands of tasks. The coalesce is narrow (no
+    job); ``replaced`` is a pinned frame or a plain scan in every batch
+    caller, so reading its partition count runs no job either (on a frame
+    with an exchange it would run that frame's stages)."""
+    return union.coalesce(replaced.rdd.getNumPartitions())
+
+
+def upsert_state(state: OsmState, latest: DataFrame, hint: bool = True) -> OsmState:
+    """New element snapshot after the batch (T4) from ``latest_changes``.
+
+    hint=True broadcasts the changed ids into the anti join (they are
+    bounded by the batch size); unhinted the join sort-merges, i.e.
+    shuffles the entire state per batch. The replication runner drops the
+    hint for a catch-up-sized batch."""
 
     def upd(df: DataFrame, kind: str) -> DataFrame:
-        last = _last_change_per_id(changes, kind)
-        changed_ids = last.select(F.col(kind)["id"].alias("id"))
-        kept = df.join(changed_ids, "id", "left_anti")
-        upserts = last.filter(F.col("op") != "delete").select(f"{kind}.*")
+        changed_ids = _changed_ids(latest, kind)
+        kept = df.join(F.broadcast(changed_ids) if hint else changed_ids, "id", "left_anti")
+        upserts = latest.filter(
+            (F.col("kind") == kind) & (F.col("op") != "delete")
+        ).select(f"{kind}.*")
         # allowMissingColumns: pre-metadata state DataFrames (or fixture
         # frames built without the optional metadata struct) upsert cleanly
-        return kept.unionByName(upserts, allowMissingColumns=True)
+        return _bounded(df, kept.unionByName(upserts, allowMissingColumns=True))
 
     return OsmState(
         nodes=upd(state.nodes, "node"),
         ways=upd(state.ways, "way"),
         relations=upd(state.relations, "relation"),
     )
+
+
+def apply_changes_to_state(state: OsmState, changes: DataFrame) -> OsmState:
+    """New element snapshot after the batch (T4)."""
+    return upsert_state(state, latest_changes(changes))
 
 
 @dataclass
@@ -75,6 +108,41 @@ class Frontier:
     rel_ids: DataFrame
 
 
+def frontier_from_latest(
+    state: OsmState, latest: DataFrame, pin: bool = False, hint: bool = True
+) -> Frontier:
+    """T3: changed ids + transitive dependents (2 hops max: node->way->rel),
+    walked over the OLD state only.
+
+    The old index catches ways/relations that referenced a now-deleted or
+    moved element. The new state needs no walk of its own: its ways are the
+    old ways minus the changed ones plus the upserted (changed) ones, so a
+    new-state way referencing a changed node is either an old way with the
+    same refs or a changed way, already in the frontier; the same holds for
+    relations. So the frontier does not wait for the new state's pins.
+
+    pin=True localCheckpoints the way and relation id sets (tiny — bounded
+    by the batch's blast radius; the node ids are a filter of ``latest``,
+    which the caller pins). Everything downstream of a batch references the
+    frontier MANY times (3 rebuild semi-joins, ~7 delete anti-joins, 6
+    expiry branches), and Spark re-executes a shared subtree once per
+    referencing branch — unpinned, each reference re-pays the full
+    reverse-reference scan of the state. Round-10 benchdiff measured the
+    unpinned chain at ~10x the pinned wall on a 32-replica Monaco state.
+    The way hop is pinned BEFORE the relation hop consumes it, so that hop
+    scans the state once against a materialized way frontier."""
+    changed_nodes = _changed_ids(latest, "node")
+    dep_ways = ri.dependent_ways(state.ways, changed_nodes, hint=hint)
+    way_frontier = _changed_ids(latest, "way").unionByName(dep_ways).distinct()
+    if pin:
+        way_frontier = way_frontier.localCheckpoint()
+    dep_rels = ri.dependent_relations(state.relations, changed_nodes, way_frontier, hint=hint)
+    rel_frontier = _changed_ids(latest, "relation").unionByName(dep_rels).distinct()
+    if pin:
+        rel_frontier = rel_frontier.localCheckpoint()
+    return Frontier(node_ids=changed_nodes, way_ids=way_frontier, rel_ids=rel_frontier)
+
+
 def compute_frontier(
     state: OsmState,
     new_state: OsmState,
@@ -82,59 +150,31 @@ def compute_frontier(
     pin: bool = False,
     hint: bool = True,
 ) -> Frontier:
-    """T3: changed ids + transitive dependents (2 hops max: node->way->rel).
+    """T3 frontier of ``changes`` (see frontier_from_latest). ``new_state``
+    is not read: the old-state walk already covers it. pin=True also pins
+    the latest change set the node ids are read from."""
+    latest = latest_changes(changes)
+    return frontier_from_latest(state, latest.localCheckpoint() if pin else latest, pin, hint)
 
-    Dependencies are resolved against BOTH the old and new state: the old
-    index catches ways/relations that referenced a now-deleted element; the
-    new index catches references added by the batch.
 
-    pin=True localCheckpoints the three id sets (tiny — bounded by the
-    batch's blast radius). Everything downstream of a batch references the
-    frontier MANY times (3 rebuild semi-joins, ~7 delete anti-joins, 6
-    expiry branches), and Spark re-executes a shared subtree once per
-    referencing branch — unpinned, each reference re-pays the full
-    reverse-reference scan of the state. Round-10 benchdiff measured the
-    unpinned chain at ~10x the pinned wall on a 32-replica Monaco state."""
-    changed_nodes = changes.filter(F.col("kind") == "node").select(
-        F.col("node")["id"].alias("id")
-    ).distinct()
-    changed_ways = changes.filter(F.col("kind") == "way").select(
-        F.col("way")["id"].alias("id")
-    ).distinct()
-    changed_rels = changes.filter(F.col("kind") == "relation").select(
-        F.col("relation")["id"].alias("id")
-    ).distinct()
+def pin_state_and_frontier(
+    state: OsmState, changes: DataFrame, hint: bool = True
+) -> tuple[OsmState, Frontier]:
+    """The batch's pinned new state and frontier: the latest change set is
+    pinned once (one job), then the three state pins and the frontier walk
+    (which reads only the old state) run concurrently — four small
+    independent job chains instead of a serial chain of them.
 
-    if pin:
-        # pin each hop BEFORE the next consumes it, so the rel hop scans
-        # the state once against a materialized way frontier instead of
-        # embedding (and re-executing) the whole way-hop subtree
-        changed_nodes = changed_nodes.localCheckpoint()
-
-    dep_ways = _union_all(
-        [
-            ri.dependent_ways(state.ways, changed_nodes, hint=hint),
-            ri.dependent_ways(new_state.ways, changed_nodes, hint=hint),
-        ]
-    ).distinct()
-    way_frontier = changed_ways.unionByName(dep_ways).distinct()
-    if pin:
-        way_frontier = way_frontier.localCheckpoint()
-
-    dep_rels = _union_all(
-        [
-            ri.dependent_relations(
-                state.relations, changed_nodes, way_frontier, hint=hint
-            ),
-            ri.dependent_relations(
-                new_state.relations, changed_nodes, way_frontier, hint=hint
-            ),
-        ]
-    ).distinct()
-    rel_frontier = changed_rels.unionByName(dep_rels).distinct()
-    if pin:
-        rel_frontier = rel_frontier.localCheckpoint()
-    return Frontier(node_ids=changed_nodes, way_ids=way_frontier, rel_ids=rel_frontier)
+    Pinning both first matters: every downstream consumer (rebuild
+    semi-joins, delete anti-joins, expiry branches, gen refresh) references
+    them several times, and Spark re-executes an unpinned subtree once per
+    referencing branch."""
+    latest = latest_changes(changes).localCheckpoint()
+    new_state = upsert_state(state, latest, hint=hint)
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        pins = [pool.submit(df.localCheckpoint) for df in vars(new_state).values()]
+        frontier = pool.submit(frontier_from_latest, state, latest, True, hint)
+        return OsmState(*(f.result() for f in pins)), frontier.result()
 
 
 def affected_osm_ids(pipe: ImportPipeline, frontier: Frontier) -> dict[str, DataFrame]:
@@ -314,14 +354,14 @@ def _any_match(pipe: ImportPipeline, units, tags, closed, relation: bool):
     return cond
 
 
-def expired_tiles_for_batch(
+def expired_tile_list(
     pipe: ImportPipeline,
     state: OsmState,
     new_state: OsmState,
     frontier: Frontier,
     max_zoom: int = 14,
     hint: bool = True,
-) -> DataFrame:
+) -> TileExpireList:
     """T7: z/x/y tiles touched by the batch — both the OLD geometries (the
     deleter expires rows it removes, update/deleter.go:136-238) and the
     NEW ones (writers expire inserted rows). Expiry is MATCH-AWARE: only
@@ -336,9 +376,11 @@ def expired_tiles_for_batch(
       side uses closed=polygon-matched (deleter.go:153), the writer side
       closed=true (writer/relations.go:127-131)
 
-    Returns DISTINCT (z, x, y); feed to TileExpireList/flush for the file
-    sink (S14)."""
-    from imposm3_spark.expire.tiles import expired_tiles
+    The touched geometries (blast-radius-sized: ~900 for a 500-change
+    batch) are collected in one action and tiled on the driver into a
+    TileExpireList; `flush` writes the file sink (S14). Tiling them in a
+    pandas UDF with an explode + distinct took ~8x longer for the same
+    tiles: the Python worker round trip dominates at this size."""
     from imposm3_spark.mapping.matcher import tag_prefilter_expr
 
     # The match/prefilter Column trees are LARGE (every unit's match +
@@ -391,9 +433,9 @@ def expired_tiles_for_batch(
 
         # Pin discipline: the way sets are pinned inside _resolve_latlon
         # (multiply-referenced there); nodes/relations are consumed
-        # exactly once each, and the geoms union at the end pins the
-        # whole batch in one job — pinning them here would only add a job
-        # of fixed overhead per branch.
+        # exactly once each, and the geoms union at the end is collected
+        # in one action — pinning them here would only add a job of fixed
+        # overhead per branch.
 
         # nodes (deleter.go:206-238; writer/nodes.go:91-92)
         nd = (
@@ -462,15 +504,25 @@ def expired_tiles_for_batch(
             )
         )
 
-    geoms = parts[0]
-    for p in parts[1:]:
-        geoms = geoms.unionByName(p)
-    # materialize the (blast-radius-sized) union in ONE job before the
-    # tiles UDF: otherwise AQE runs each of the six branches as its own
-    # stage-job chain through the Python runner (~20 jobs of fixed
-    # overhead to tile a few hundred geometries)
-    geoms = geoms.localCheckpoint()
-    return expired_tiles(geoms, max_zoom=max_zoom)
+    tiles = TileExpireList(max_zoom=max_zoom)
+    for row in _union_all(parts).collect():
+        tiles.expire_nodes([(c[0], c[1]) for c in row["coords"] or ()], bool(row["closed"]))
+    return tiles
+
+
+def expired_tiles_for_batch(
+    pipe: ImportPipeline,
+    state: OsmState,
+    new_state: OsmState,
+    frontier: Frontier,
+    max_zoom: int = 14,
+    hint: bool = True,
+) -> DataFrame:
+    """expired_tile_list's DISTINCT (z, x, y) tiles as a local DataFrame."""
+    tiles = expired_tile_list(pipe, state, new_state, frontier, max_zoom, hint)
+    return state.nodes.sparkSession.createDataFrame(
+        sorted(tiles.as_set()), "z int, x int, y int"
+    )
 
 
 def apply_batch(
@@ -502,9 +554,9 @@ def apply_batch(
         # pinned by default: the frontier is referenced by the 3 rebuild
         # semi-joins AND every table's delete anti-join below — unpinned,
         # each reference re-executes the reverse-reference scans (see
-        # compute_frontier docstring). Callers that already hold a pinned
-        # frontier (diff/runner, streaming/replication) pass it in so the
-        # batch computes it exactly once.
+        # frontier_from_latest docstring). Callers that already hold a
+        # pinned frontier (diff/runner, streaming/replication) pass it in
+        # so the batch computes it exactly once.
         frontier = compute_frontier(state, new_state, changes, pin=True, hint=hint)
     rebuilt = rebuild_tables(pipe, new_state, frontier, hint=hint)
     delete_ids = affected_osm_ids(pipe, frontier)
@@ -523,7 +575,7 @@ def apply_batch(
             else df
         )
         if name in rebuilt:
-            kept = kept.unionByName(rebuilt[name])
+            kept = _bounded(df, kept.unionByName(rebuilt[name]))
         new_tables[name] = kept
     for name, df in rebuilt.items():
         if name not in new_tables:

@@ -9,22 +9,16 @@ Semantics ported exactly:
 - closed geometry: bbox fill if <64 tiles else cascade down like lines
 - output: z/x/y lines per batch, atomic rename (162-211)
 
-Spark shape: the per-element tile computation is a pandas UDF over the
-coordinate arrays (row-parallel), the final dedup is explode + distinct —
-one small shuffle keyed by tile id (A5)."""
+Spark shape: none here. A diff batch's touched geometries are
+blast-radius-sized (hundreds per minutely batch), so diff/update collects
+them in one action and tiles them on the driver into a TileExpireList,
+whose tile sets dedupe as they fill (A5)."""
 
 from __future__ import annotations
 
-import math
 import os
 import time
 from pathlib import Path
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
 from imposm3_spark.geom.proj import py_wgs_to_merc
 
@@ -185,54 +179,3 @@ def _line_tiles(coords, zoom: int) -> list[tuple[int, int, int]]:
         else:
             out.update(_bresenham(x1, y1, x2, y2))
     return [(zoom, x, y) for x, y in out]
-
-
-# ---------------------------------------------------------------------------
-# distributed wrapper
-# ---------------------------------------------------------------------------
-
-_TILE_STRUCT = ArrayType(
-    StructType(
-        [
-            StructField("z", IntegerType()),
-            StructField("x", IntegerType()),
-            StructField("y", IntegerType()),
-        ]
-    )
-)
-
-
-def make_tiles_udf(max_zoom: int):
-    @pandas_udf(_TILE_STRUCT)
-    def tiles_udf(coords: pd.Series, closed: pd.Series) -> pd.Series:
-        out = []
-        for arr, cl in zip(coords, closed):
-            if arr is None or len(arr) == 0:
-                out.append([])
-                continue
-            pts = [(c["lon"], c["lat"]) for c in arr]
-            out.append(
-                [
-                    {"z": z, "x": x, "y": y}
-                    for z, x, y in nodes_tiles(pts, bool(cl), max_zoom)
-                ]
-            )
-        return pd.Series(out, dtype=object)
-
-    return tiles_udf
-
-
-def expired_tiles(
-    df: DataFrame, coords_col: str = "coords", closed_col: str = "closed", max_zoom: int = 14
-) -> DataFrame:
-    """(z, x, y) DISTINCT tiles touched by the given geometries.
-
-    df: one row per changed geometry with `coords ARRAY<STRUCT<lon,lat>>`
-    and a `closed` flag. Tiles per row are computed in parallel; the final
-    distinct is one small shuffle (tile-count bounded)."""
-    udf = make_tiles_udf(max_zoom)
-    return (
-        df.select(F.explode(udf(F.col(coords_col), F.col(closed_col))).alias("t"))
-        .select("t.z", "t.x", "t.y")
-        .distinct()
-    )

@@ -186,10 +186,15 @@ def parse_osc_rows(root: ET.Element, pos_offset: int = 0) -> list[tuple]:
     return rows
 
 
+def read_osc_rows(path: str | Path) -> list[tuple]:
+    """Parse an OsmChange (.osc / .osc.gz) file into CHANGE_SCHEMA tuples."""
+    return parse_osc_rows(_read_xml(path))
+
+
 def read_osc_xml(spark: SparkSession, path: str | Path) -> DataFrame:
     """Parse an OsmChange (.osc / .osc.gz) file into a CDC DataFrame.
 
     Parity: vendor/go-osm/parser/diff + update/process.go:33-46. Each row is
     one change: op (create|modify|delete), kind, and the element payload.
     """
-    return spark.createDataFrame(parse_osc_rows(_read_xml(path)), CHANGE_SCHEMA)
+    return spark.createDataFrame(read_osc_rows(path), CHANGE_SCHEMA)

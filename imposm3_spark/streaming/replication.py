@@ -33,7 +33,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from imposm3_spark.diff.update import OsmState, apply_batch, compute_frontier
+from imposm3_spark.diff.update import (
+    OsmState,
+    apply_batch,
+    expired_tile_list,
+    pin_state_and_frontier,
+)
 from imposm3_spark.pipeline.engine import ImportPipeline
 from imposm3_spark.sources.osm_xml import CHANGE_SCHEMA, parse_osc_rows
 
@@ -56,18 +61,10 @@ class StreamingReplicator:
         if not rows:
             return
         changes = self.spark.createDataFrame(rows, CHANGE_SCHEMA)
-        # pin state + frontier once, then every downstream consumer
-        # (rebuild/delete/expiry/gens) reads the materialized sets — same
-        # shape as diff/runner.apply_one (see its comment for the why)
-        from imposm3_spark.diff.update import apply_changes_to_state
-
-        new_state = apply_changes_to_state(self.state, changes)
-        new_state = OsmState(
-            new_state.nodes.localCheckpoint(),
-            new_state.ways.localCheckpoint(),
-            new_state.relations.localCheckpoint(),
-        )
-        frontier = compute_frontier(self.state, new_state, changes, pin=True)
+        # pin state + frontier once (the same helper as
+        # diff/runner.apply_one), then every downstream consumer
+        # (rebuild/delete/expiry/gens) reads the materialized sets
+        new_state, frontier = pin_state_and_frontier(self.state, changes)
         _, new_tables, affected = apply_batch(
             self.pipe,
             self.state,
@@ -78,14 +75,7 @@ class StreamingReplicator:
             frontier=frontier,
         )
         if self.expire_dir is not None:
-            from imposm3_spark.diff.update import expired_tiles_for_batch
-            from imposm3_spark.expire.tiles import TileExpireList
-
-            tiles = expired_tiles_for_batch(self.pipe, self.state, new_state, frontier)
-            tl = TileExpireList(max_zoom=14)
-            for r in tiles.collect():
-                tl.tiles.setdefault(r["z"], set()).add((r["x"], r["y"]))
-            tl.flush(self.expire_dir)
+            expired_tile_list(self.pipe, self.state, new_state, frontier).flush(self.expire_dir)
         new_tables = {n: df.localCheckpoint() for n, df in new_tables.items()}
         if self.gens is not None:
             from imposm3_spark.pipeline.generalize import refresh_generalized_tables
