@@ -211,29 +211,22 @@ def _load_state(spark, out: str):
 
 
 def cmd_diff(args, files: list[str]) -> int:
-    from imposm3_spark.diff.update import apply_batch
+    from imposm3_spark.diff.runner import apply_change_rows
     from imposm3_spark.mapping.config import load_mapping
     from imposm3_spark.pipeline.engine import ImportPipeline
-    from imposm3_spark.sources.osm_xml import read_osc_xml
+    from imposm3_spark.sources.osm_xml import read_osc_rows
 
     spark = _build_spark(args)
     mapping = load_mapping(args.mapping)
     pipe = ImportPipeline(mapping, srid=args.srid, limiter=_limiter(args))
     out = args.write_parquet
     state = _load_state(spark, out)
-    table_names = list(mapping.tables)
-    tables = {n: spark.read.parquet(str(Path(out) / n)) for n in table_names}
+    tables = {n: spark.read.parquet(str(Path(out) / n)) for n in mapping.tables}
 
     for f in files:
-        changes = read_osc_xml(spark, f)
-        state, tables = apply_batch(pipe, state, tables, changes)
-        # materialize before the swap: the new plans read the old files
-        tables = {n: df.localCheckpoint() for n, df in tables.items()}
-        state = type(state)(
-            state.nodes.localCheckpoint(),
-            state.ways.localCheckpoint(),
-            state.relations.localCheckpoint(),
-        )
+        # the step pins the new state and tables, so the swap below never
+        # reads the files it replaces
+        state, tables, _, _ = apply_change_rows(spark, pipe, state, tables, None, read_osc_rows(f))
         print(f"applied {f}")
 
     for name, df in tables.items():

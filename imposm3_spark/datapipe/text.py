@@ -40,7 +40,11 @@ def eval_once(col: Column) -> Column:
     becomes nullable in the schema; callers that filter on it drop the
     impossible-NULL rows identically either way. Use ONLY on expressions
     whose re-evaluation is the dominant cost: the wrapper also blocks
-    pushing OTHER filters past the projection (guide §4.4's trade-off)."""
+    pushing OTHER filters past the projection (guide §4.4's trade-off).
+
+    The same guard keeps a cheap pruning join below an expensive
+    predicate: diff/update._match_after_prune filters the expiry
+    branches' blast-radius rows only, not the whole element state."""
     return F.when(F.spark_partition_id() >= 0, col)
 
 # tiny per-language stopword lists for the n-gram/stopword heuristic

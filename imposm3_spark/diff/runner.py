@@ -6,10 +6,11 @@ OsmChange files, apply each exactly once, checkpoint `last.state.txt`.
 
 Spark shape: a driver-side micro-batch loop (the reference has no
 watermarks/event-time either — every change applies, last-write-wins per
-id). Each batch is `apply_batch` (pure DataFrame algebra) + an atomic state
-write, i.e. foreachBatch semantics with a file checkpoint. The element
-state and output tables are persisted per batch and the previous versions
-unpersisted — bounded memory, restart picks up from last.state.txt.
+id). Each batch is `apply_change_rows` (the batch step shared with the
+streaming replicator and `imposm3_spark diff`) + an atomic state write,
+i.e. foreachBatch semantics with a file checkpoint. The element state and
+output tables are pinned per batch and the previous versions released —
+bounded memory, restart picks up from last.state.txt.
 
 Sequence files follow the osmosis layout the reference consumes:
   <dir>/NNN/NNN/NNN.osc.gz  (or flat <dir>/<seq>.osc[.gz])
@@ -19,7 +20,6 @@ with a sibling .state.txt; we accept both layouts.
 from __future__ import annotations
 
 import gc
-import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -82,6 +82,100 @@ def sequence_path(diff_dir: str | Path, seq: int) -> Path | None:
     return None
 
 
+# Broadcast-hint gate (round-10 ADVICE): the hints assume a
+# blast-radius-bounded batch, but batch size is input-controlled (catch-up
+# replication, a streaming backlog, mass edits). A batch of at most
+# DIFF_GATE changes pays NOTHING for the gate (the parsed row count is
+# known on the driver); a larger one sort-merges its state anti joins and
+# frontier walk, then pays three tiny count jobs on the pinned frontier
+# frames and, if any side exceeds DIFF_BROADCAST_LIMIT ids (~32 MB), drops
+# every downstream hint so the joins degrade to sort-merge instead of
+# OOMing the driver. Residual (documented): a pathological fan-out from
+# FEW changes is not gated — it is bounded by the state's max ways-per-node
+# fan-in.
+DIFF_GATE = 100_000
+DIFF_BROADCAST_LIMIT = 4_000_000
+
+
+def apply_change_rows(
+    spark: SparkSession,
+    pipe: ImportPipeline,
+    state: OsmState,
+    tables: dict[str, DataFrame],
+    gens: dict[str, DataFrame] | None,
+    rows: list[tuple],
+    expire_dir: str | None = None,
+    expire_zoom: int = 14,
+) -> tuple[OsmState, dict[str, DataFrame], dict[str, DataFrame] | None, dict[str, float]]:
+    """One replication batch: CHANGE_SCHEMA rows -> the pinned new state,
+    tables and generalized tables, plus per-stage walls. The one batch body
+    of ``ReplicationRunner``, ``StreamingReplicator`` and ``imposm3_spark
+    diff`` (update/cmd.go:81-257 is likewise one loop for all three).
+
+    Stage walls mark where the LAZY batch plan actually executes: state at
+    the change-set pin and the concurrent state and frontier pins;
+    frontier at the broadcast gate only (no job below the gate); rebuild at
+    the engine's shared-frontier pins; tables/gens at their
+    localCheckpoints; expire (concurrent with rebuild and tables) at its
+    geometry collect."""
+    stage_secs: dict[str, float] = {}
+    changes = spark.createDataFrame(rows, CHANGE_SCHEMA)
+    small = len(rows) <= DIFF_GATE
+    t0 = time.perf_counter()
+    new_state, frontier = pin_state_and_frontier(state, changes, hint=small)
+    stage_secs["state"] = round(time.perf_counter() - t0, 3)
+    t0 = time.perf_counter()
+    hint = small or all(
+        df.count() <= DIFF_BROADCAST_LIMIT
+        for df in (frontier.node_ids, frontier.way_ids, frontier.rel_ids)
+    )
+    stage_secs["frontier"] = round(time.perf_counter() - t0, 3)
+
+    def _expire() -> float:
+        t0 = time.perf_counter()
+        expired_tile_list(
+            pipe, state, new_state, frontier, max_zoom=expire_zoom, hint=hint
+        ).flush(expire_dir)
+        return round(time.perf_counter() - t0, 3)
+
+    # expiry depends only on (state, new_state, frontier) — all pinned
+    # above — so it runs CONCURRENTLY with the rebuild and the table pins
+    # below; its wall is still recorded separately. Its result is read
+    # (and the pool left) even when the rebuild or a table pin raises
+    # mid-batch.
+    with ThreadPoolExecutor(max_workers=1) as expire_pool:
+        expire_future = expire_pool.submit(_expire) if expire_dir is not None else None
+        try:
+            t0 = time.perf_counter()
+            _, new_tables, affected = apply_batch(
+                pipe,
+                state,
+                tables,
+                changes,
+                with_affected=True,
+                new_state=new_state,
+                frontier=frontier,
+                hint=hint,
+            )
+            # plan construction + the engine's shared-frontier pins (the
+            # rebuilt rows themselves materialize under "tables")
+            stage_secs["rebuild"] = round(time.perf_counter() - t0, 3)
+            t0 = time.perf_counter()
+            new_tables = _pin_all(new_tables)
+            stage_secs["tables"] = round(time.perf_counter() - t0, 3)
+        finally:
+            if expire_future is not None:
+                stage_secs["expire"] = expire_future.result()
+    if gens is not None:
+        # per-id gen refresh (T6) off the MATERIALIZED base tables
+        from imposm3_spark.pipeline.generalize import refresh_generalized_tables
+
+        t0 = time.perf_counter()
+        gens = _pin_all(refresh_generalized_tables(pipe.mapping, gens, new_tables, affected))
+        stage_secs["gens"] = round(time.perf_counter() - t0, 3)
+    return new_state, new_tables, gens, stage_secs
+
+
 @dataclass
 class ReplicationRunner:
     spark: SparkSession
@@ -117,110 +211,26 @@ class ReplicationRunner:
         path = sequence_path(self.diff_dir, seq)
         if path is None:
             return False
-        # Stage walls for observability (imposm3_spark/benchdiff.py reads
-        # them): each key marks where the LAZY batch plan actually
-        # executes — state at the change-set pin and the concurrent
-        # state and frontier pins; frontier at the broadcast gate only
-        # (no job below the gate); rebuild at the engine's shared-frontier
-        # pins; tables/gens at their localCheckpoints; expire (concurrent
-        # with rebuild and tables) at its geometry collect; store at the
-        # durable save.
-        stage_secs: dict[str, float] = {}
         t0 = time.perf_counter()
         rows = read_osc_rows(path)
-        changes = self.spark.createDataFrame(rows, CHANGE_SCHEMA)
-        stage_secs["read"] = round(time.perf_counter() - t0, 3)
-
-        # Broadcast-hint gate (round-10 ADVICE): the hints assume a
-        # blast-radius-bounded batch, but batch size is input-controlled
-        # (catch-up replication, mass edits). Normal batches pay NOTHING
-        # here (the parsed row count is known on the driver); a
-        # catch-up-sized batch sort-merges its state anti joins and
-        # frontier walk, then pays three tiny count jobs on the pinned
-        # frontier frames and, if any side could exceed the broadcastable
-        # bound, drops every downstream hint so the joins degrade to
-        # sort-merge instead of OOMing the driver. Residual (documented):
-        # a pathological fan-out from FEW changes is not gated — it is
-        # bounded by the state's max ways-per-node fan-in.
-        small = len(rows) <= int(os.environ.get("SPARK_GRAFT_DIFF_GATE", "100000"))
-        t0 = time.perf_counter()
-        new_state, frontier = pin_state_and_frontier(self.state, changes, hint=small)
-        stage_secs["state"] = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        hint = small
-        if not small:
-            limit = int(os.environ.get("SPARK_GRAFT_DIFF_BROADCAST_LIMIT", "4000000"))
-            hint = all(
-                df.count() <= limit
-                for df in (frontier.node_ids, frontier.way_ids, frontier.rel_ids)
-            )
-        stage_secs["frontier"] = round(time.perf_counter() - t0, 3)
-
-        old_state = self.state
-        expire_future = None
-        expire_pool = None
-        try:
-            if self.expire_dir is not None:
-                # expiry depends only on (state, new_state, frontier) — all
-                # pinned above — so it runs CONCURRENTLY with the rebuild
-                # and the table pins below; its wall is still recorded
-                # separately.
-                def _expire() -> float:
-                    t0 = time.perf_counter()
-                    expired_tile_list(
-                        self.pipe,
-                        old_state,
-                        new_state,
-                        frontier,
-                        max_zoom=self.expire_zoom,
-                        hint=hint,
-                    ).flush(self.expire_dir)
-                    return round(time.perf_counter() - t0, 3)
-
-                expire_pool = ThreadPoolExecutor(max_workers=1)
-                expire_future = expire_pool.submit(_expire)
-            t0 = time.perf_counter()
-            _, new_tables, affected = apply_batch(
-                self.pipe,
-                old_state,
-                self.tables,
-                changes,
-                with_affected=True,
-                new_state=new_state,
-                frontier=frontier,
-                hint=hint,
-            )
-            # plan construction + the engine's shared-frontier pins (the
-            # rebuilt rows themselves materialize under "tables")
-            stage_secs["rebuild"] = round(time.perf_counter() - t0, 3)
-            t0 = time.perf_counter()
-            new_tables = _pin_all(new_tables)
-            stage_secs["tables"] = round(time.perf_counter() - t0, 3)
-        finally:
-            # the expire pool must not leak (and its future must be
-            # awaited) even when the rebuild or a table pin raises
-            # mid-batch (round-10 ADVICE)
-            if expire_pool is not None:
-                if expire_future is not None:
-                    stage_secs["expire"] = expire_future.result()
-                expire_pool.shutdown()
-        if self.gens is not None:
-            # per-id gen refresh (T6) off the MATERIALIZED base tables
-            from imposm3_spark.pipeline.generalize import refresh_generalized_tables
-
-            t0 = time.perf_counter()
-            self.gens = _pin_all(
-                refresh_generalized_tables(self.pipe.mapping, self.gens, new_tables, affected)
-            )
-            stage_secs["gens"] = round(time.perf_counter() - t0, 3)
-        self.state = new_state
-        self.tables = new_tables
+        read_s = round(time.perf_counter() - t0, 3)
+        self.state, self.tables, self.gens, stage_secs = apply_change_rows(
+            self.spark,
+            self.pipe,
+            self.state,
+            self.tables,
+            self.gens,
+            rows,
+            self.expire_dir,
+            self.expire_zoom,
+        )
+        stage_secs = {"read": read_s, **stage_secs}
         if self.state_store is not None:
             # durable publish BEFORE the sequence checkpoint: a crash
             # between the two replays the batch onto the already-updated
             # state, which is idempotent (last-write-wins upsert)
             t0 = time.perf_counter()
-            self.state_store.save(new_state)
+            self.state_store.save(self.state)
             self.state = self.state_store.load()
             stage_secs["store"] = round(time.perf_counter() - t0, 3)
         write_state_txt(self.state_file, seq)

@@ -13,9 +13,12 @@ Semantics ported:
 - the rebuild reuses the exact import pipeline on the affected subset (T5)
 
 Spark shape: a batch is pure DataFrame algebra — anti-join + union for
-state, semi-joins for the frontier, the ImportPipeline for rebuild. Wrap
-`apply_batch` in foreachBatch for Structured Streaming; state tables would
-be Delta/parquet at scale (here: in-memory DataFrames, .persist()ed).
+state, semi-joins for the frontier, the ImportPipeline for rebuild.
+diff/runner.apply_change_rows wraps it into the one batch step (pins,
+expiry, gen refresh) that the replication runner, the streaming
+foreachBatch and `imposm3_spark diff` call; state tables would be
+Delta/parquet at scale (here: in-memory DataFrames, localCheckpointed per
+batch).
 """
 
 from __future__ import annotations
@@ -27,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from imposm3_spark import elements as el
+from imposm3_spark.datapipe.text import eval_once
 from imposm3_spark.diff import refindex as ri
 from imposm3_spark.expire.tiles import TileExpireList
 from imposm3_spark.pipeline.engine import ImportPipeline, _union_all
@@ -39,9 +43,6 @@ class OsmState:
     nodes: DataFrame
     ways: DataFrame
     relations: DataFrame
-
-    def persist(self) -> "OsmState":
-        return OsmState(self.nodes.persist(), self.ways.persist(), self.relations.persist())
 
 
 def latest_changes(changes: DataFrame) -> DataFrame:
@@ -316,15 +317,6 @@ def _resolve_latlon(ways: DataFrame, nodes: DataFrame, keep_cols: list[str]) -> 
     )
 
 
-def _eval_once(cond):
-    """Trivially-true nondeterministic guard (spark_partition_id() is
-    never negative — value unchanged): bars Catalyst from substituting
-    the wrapped expression into pushed-down filters, so a cheap pruning
-    join below runs FIRST and the expression touches only surviving
-    rows. See _match_after_prune for the measured case."""
-    return F.when(F.spark_partition_id() >= 0, cond)
-
-
 def _match_after_prune(df: DataFrame, cond) -> DataFrame:
     """Filter ``df`` by the (expensive) mapping-match predicate WITHOUT
     letting Catalyst push it below the frontier semi join.
@@ -336,11 +328,11 @@ def _match_after_prune(df: DataFrame, cond) -> DataFrame:
     for a deterministic filter), that tree evaluates over the ENTIRE
     state per branch per batch: round-10 probe measured the four
     _resolve_latlon constructions at 11-14 s/batch, almost all of it
-    full-table match evaluation. The _eval_once guard bars the
+    full-table match evaluation. The eval_once guard bars the
     substitution, so the semi join runs first and the match tree touches
     only blast-radius rows."""
     flag = "_match_keep"
-    return df.withColumn(flag, _eval_once(cond)).filter(F.col(flag)).drop(flag)
+    return df.withColumn(flag, eval_once(cond)).filter(F.col(flag)).drop(flag)
 
 
 def _any_match(pipe: ImportPipeline, units, tags, closed, relation: bool):
@@ -458,12 +450,12 @@ def expired_tile_list(
             .filter(F.size("tags") > 0)
             .withColumn("tags", exprs["way_prefilter"])
         )
-        # guarded (_eval_once): keeps the match evaluation above the
+        # guarded (eval_once): keeps the match evaluation above the
         # frontier semi join — see _match_after_prune
         wy = wy.withColumns(
             {
-                "_line_m": _eval_once(exprs["line_m"]),
-                "_poly_m": _eval_once(exprs["poly_m"]),
+                "_line_m": eval_once(exprs["line_m"]),
+                "_poly_m": eval_once(exprs["poly_m"]),
             }
         ).filter(F.col("_line_m") | F.col("_poly_m"))
         parts.append(
@@ -479,7 +471,7 @@ def expired_tile_list(
             .filter(F.size("tags") > 0)
             .withColumn("tags", exprs["rel_prefilter"])
         )
-        rl = rl.withColumn("_poly_m", _eval_once(exprs["rpoly_m"])).filter(
+        rl = rl.withColumn("_poly_m", eval_once(exprs["rpoly_m"])).filter(
             # the disjunction references the guarded _poly_m, so the whole
             # predicate (incl. the relation-match tree) stays above the
             # frontier semi join

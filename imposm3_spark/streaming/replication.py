@@ -10,14 +10,17 @@ Shape:
 - `readStream.format("text").option("wholetext", true)` turns each
   `.osc` file into ONE row (OSC is a document format, not line-delimited;
   minutely change files are KB-MB sized, so a whole-file row is cheap);
-- `foreachBatch` applies the SAME `apply_batch` DataFrame algebra as the
-  batch diff path (T2-T6) — one transactional micro-batch over all files
-  discovered this trigger, which is exactly the reference's
-  `-commit-latest` mode (multiple sequence files in one commit,
-  update/cmd.go:81-164);
-- files within a batch are applied in filename order (sequence numbers
-  sort lexicographically in the osmosis layout) and change order is kept
-  global across files, so last-write-wins per element spans the batch.
+- `foreachBatch` applies the SAME batch step as the replication runner
+  and `imposm3_spark diff` (diff/runner.apply_change_rows, T1-T7) — one
+  transactional micro-batch over all files discovered this trigger, which
+  is exactly the reference's `-commit-latest` mode (multiple sequence
+  files in one commit, update/cmd.go:81-164); a backlog trigger gets the
+  step's catch-up broadcast gate;
+- the stream reads flat `*.osc` files (`<seq>.osc`, the runner's flat
+  layout); files within a batch are applied in sequence order (the
+  integer leading the basename, so `9.osc` before `10.osc`; path order
+  breaks ties) and change order is kept global across files, so
+  last-write-wins per element spans the batch.
 
 State (element snapshot + output tables + generalized tables) lives on
 the driver between micro-batches as checkpointed DataFrames — the same
@@ -27,20 +30,26 @@ tables would be Delta/parquet sinks written per batch.
 
 from __future__ import annotations
 
+import gc
+import re
 import xml.etree.ElementTree as ET
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from imposm3_spark.diff.update import (
-    OsmState,
-    apply_batch,
-    expired_tile_list,
-    pin_state_and_frontier,
-)
+from imposm3_spark.diff.runner import apply_change_rows
+from imposm3_spark.diff.update import OsmState
 from imposm3_spark.pipeline.engine import ImportPipeline
-from imposm3_spark.sources.osm_xml import CHANGE_SCHEMA, parse_osc_rows
+from imposm3_spark.sources.osm_xml import parse_osc_rows
+
+
+def sequence_order(path: str) -> tuple:
+    """Sort key for landed change files: the sequence number leading the
+    basename (`9.osc` before `10.osc`, `000000002.osc` before both), then
+    the path; names without a leading number sort last."""
+    m = re.match(r"\d+", path.rsplit("/", 1)[-1])
+    return (int(m.group()) if m else float("inf"), path)
 
 
 @dataclass
@@ -60,33 +69,12 @@ class StreamingReplicator:
             rows.extend(parse_osc_rows(ET.fromstring(text), pos_offset=len(rows)))
         if not rows:
             return
-        changes = self.spark.createDataFrame(rows, CHANGE_SCHEMA)
-        # pin state + frontier once (the same helper as
-        # diff/runner.apply_one), then every downstream consumer
-        # (rebuild/delete/expiry/gens) reads the materialized sets
-        new_state, frontier = pin_state_and_frontier(self.state, changes)
-        _, new_tables, affected = apply_batch(
-            self.pipe,
-            self.state,
-            self.tables,
-            changes,
-            with_affected=True,
-            new_state=new_state,
-            frontier=frontier,
+        self.state, self.tables, self.gens, _ = apply_change_rows(
+            self.spark, self.pipe, self.state, self.tables, self.gens, rows, self.expire_dir
         )
-        if self.expire_dir is not None:
-            expired_tile_list(self.pipe, self.state, new_state, frontier).flush(self.expire_dir)
-        new_tables = {n: df.localCheckpoint() for n, df in new_tables.items()}
-        if self.gens is not None:
-            from imposm3_spark.pipeline.generalize import refresh_generalized_tables
-
-            new_gens = refresh_generalized_tables(
-                self.pipe.mapping, self.gens, new_tables, affected
-            )
-            self.gens = {n: df.localCheckpoint() for n, df in new_gens.items()}
-        self.state = new_state
-        self.tables = new_tables
         self.batches_applied += 1
+        # free the replaced pins' py4j handles (see ReplicationRunner.apply_one)
+        gc.collect()
 
     def _process_batch(self, batch_df: DataFrame, _batch_id: int) -> None:
         # whole-file rows; minutely OSC files are small — driver-side parse,
@@ -97,7 +85,7 @@ class StreamingReplicator:
             )
             .collect()
         )
-        ordered = sorted(files, key=lambda r: r["path"])
+        ordered = sorted(files, key=lambda r: sequence_order(r["path"]))
         self._apply_files([r["content"] for r in ordered])
 
     def start(

@@ -1415,3 +1415,32 @@ def test_dedup_representatives_broadcast_anti_join(spark):
     assert "BroadcastNestedLoop" not in plan, plan[:1500]
     # the corpus side must not be shuffled or distinct'd
     assert _optimized_count(plan, "Exchange hashpartitioning") == 0, plan[:1500]
+
+
+def test_eval_once_guard_keeps_other_pushdown(spark, tmp_path):
+    """eval_once (datapipe/text.py; diff/update.py's expiry match guard)
+    bars only its own expression from moving: a raw-column filter written
+    before the guarded projection still reaches the parquet scan, while a
+    filter on the guarded alias stays in a Filter above the Project.
+    Plan-only: no job runs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from imposm3_spark.datapipe.text import eval_once
+
+    path = str(tmp_path / "docs.parquet")
+    pq.write_table(pa.table({"doc_id": list(range(10)), "text": [f"doc {i} " * i for i in range(10)]}), path)
+    df = (
+        spark.read.schema("doc_id long, text string").parquet(path)
+        .filter(F.col("doc_id") > 1)
+        .withColumn("quality", eval_once(F.length("text")))
+        .filter(F.col("quality") > 3)
+    )
+    qe = df._jdf.queryExecution()
+    top = qe.optimizedPlan()
+    assert top.nodeName() == "Filter" and "quality#" in top.condition().toString()
+    assert top.child().nodeName() == "Project"
+    scan = [line for line in qe.executedPlan().toString().splitlines() if "FileScan" in line]
+    assert len(scan) == 1
+    assert "PushedFilters: [IsNotNull(doc_id), GreaterThan(doc_id,1)]" in scan[0]

@@ -1,15 +1,18 @@
 """Replication batches end to end on a synthetic fixture (T1-T7).
 
 Two OsmChange files go through ``ReplicationRunner`` with tile expiry and
-generalized tables on, and the same text through
-``StreamingReplicator._apply_files``. The first file moves a node of a
+generalized tables on, the same text through
+``StreamingReplicator._apply_files`` with the broadcast gate forced open
+(its sort-merge plans), and the files through ``imposm3_spark diff`` on the
+CLI's parquet layout. The first file moves a node of a
 multipolygon member way, deletes a way, creates a relation on a created
 way and changes one node twice; the second moves an inner-ring node, edits
 a closed way's node and deletes the created relation. After each batch:
 
 - the frontier ids are exactly the changed ids and their dependents;
 - every table and generalized table equals a fresh import of the new
-  state, and the streaming copy's tables equal the runner's;
+  state, and the streaming copy's tables equal the runner's, as do the
+  CLI's tables after both files;
 - the expired-tile file holds the multipolygon ring's old and new tiles;
 - state and table partition counts stay those of the import.
 """
@@ -21,6 +24,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from imposm3_spark import cli
 from imposm3_spark.diff import runner as runner_mod
 from imposm3_spark.diff.runner import ReplicationRunner
 from imposm3_spark.diff.update import OsmState
@@ -30,6 +34,7 @@ from imposm3_spark.pipeline.engine import ImportPipeline
 from imposm3_spark.pipeline.generalize import build_generalized_tables
 from imposm3_spark.sources.osm_xml import NODE_SCHEMA, RELATION_SCHEMA, WAY_SCHEMA
 from imposm3_spark.streaming import StreamingReplicator
+from imposm3_spark.streaming.replication import sequence_order
 
 MAPPING = """
 tables:
@@ -177,12 +182,12 @@ def test_runner_and_stream_batches(spark, imported, tmp_path, monkeypatch):
     for seq, text in enumerate((OSC_1, OSC_2), start=1):
         (diff_dir / f"{seq}.osc").write_text(text)
 
-    frontiers = []
+    pins = []  # (hint, frontier) per batch step
     pin = runner_mod.pin_state_and_frontier
 
     def recording_pin(*args, **kwargs):
         new_state, frontier = pin(*args, **kwargs)
-        frontiers.append(frontier)
+        pins.append((kwargs["hint"], frontier))
         return new_state, frontier
 
     monkeypatch.setattr(runner_mod, "pin_state_and_frontier", recording_pin)
@@ -197,10 +202,16 @@ def test_runner_and_stream_batches(spark, imported, tmp_path, monkeypatch):
         runner.expire_dir = str(tmp_path / f"expire_runner{seq}")
         stream.expire_dir = str(tmp_path / f"expire_stream{seq}")
         assert runner.apply_one(seq)
-        stream._apply_files([text])
+        with monkeypatch.context() as m:
+            # the stream's batch runs above the gate: no broadcast hints
+            m.setattr(runner_mod, "DIFF_GATE", 0)
+            m.setattr(runner_mod, "DIFF_BROADCAST_LIMIT", 0)
+            stream._apply_files([text])
+        assert [hint for hint, _ in pins[-2:]] == [True, False], f"batch {seq}"
 
-        got = {k: sorted(r[0] for r in getattr(frontiers[-1], k).collect()) for k in FRONTIERS[seq - 1]}
-        assert got == FRONTIERS[seq - 1], f"batch {seq}"
+        for _, frontier in pins[-2:]:
+            got = {k: sorted(r[0] for r in getattr(frontier, k).collect()) for k in FRONTIERS[seq - 1]}
+            assert got == FRONTIERS[seq - 1], f"batch {seq}"
 
         st = runner.state
         fresh = pipe.run(st.nodes, st.ways, st.relations)
@@ -225,3 +236,44 @@ def test_runner_and_stream_batches(spark, imported, tmp_path, monkeypatch):
     assert [r["id"] for r in st.relations.collect()] == [1]
     assert runner.tables["roads"].count() == 0
     assert sorted(r["osm_id"] for r in runner.tables["landusages"].collect()) == [-1, 104]
+
+
+def test_cli_diff_matches_runner(spark, imported, tmp_path, monkeypatch):
+    """`imposm3_spark diff` over the CLI's parquet layout (<out>/<table>,
+    <out>/_state/<kind>) ends where the runner ends after both files."""
+    mapping, pipe, state, tables, _ = imported
+    out = tmp_path / "out"
+    for name, df in tables.items():
+        df.write.parquet(str(out / name))
+    for sub, df in zip(cli.STATE_DIRS, (state.nodes, state.ways, state.relations)):
+        df.write.parquet(str(out / "_state" / sub))
+    (tmp_path / "mapping.yml").write_text(MAPPING)
+    diff_dir = tmp_path / "diffs"
+    diff_dir.mkdir()
+    for seq, text in enumerate((OSC_1, OSC_2), start=1):
+        (diff_dir / f"{seq}.osc").write_text(text)
+
+    # the CLI's own session builder would reconfigure the shared test session
+    monkeypatch.setattr(cli, "_build_spark", lambda args: spark)
+    rc = cli.main(
+        ["diff", "-mapping", str(tmp_path / "mapping.yml"), "-write-parquet", str(out)]
+        + [str(diff_dir / f"{seq}.osc") for seq in (1, 2)]
+    )
+    assert rc == 0
+
+    runner = ReplicationRunner(
+        spark=spark, pipe=pipe, state=state, tables=dict(tables), diff_dir=str(diff_dir),
+        state_file=str(tmp_path / "last.state.txt"),
+    )
+    assert runner.run() == 2
+    written = {name: spark.read.parquet(str(out / name)) for name in tables}
+    assert _digests(written) == _digests(runner.tables)
+
+
+def test_stream_applies_files_in_sequence_order():
+    paths = ["file:///landing/10.osc", "file:///landing/9.osc", "file:///landing/000000002.osc"]
+    assert sorted(paths, key=sequence_order) == [
+        "file:///landing/000000002.osc",
+        "file:///landing/9.osc",
+        "file:///landing/10.osc",
+    ]
