@@ -902,11 +902,8 @@ def doc_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and leaves 32x the block churn for the session's cleaner (round 11).
     from imposm3_spark.datapipe.sampling import plan_parallelism
 
-    q2 = (
-        q.join(keep_exact, "doc_id", "leftsemi")
-        .repartition(plan_parallelism(q))
-        .localCheckpoint(eager=True)
-    )
+    kept = q.join(keep_exact, "doc_id", "leftsemi")
+    q2 = kept.repartition(plan_parallelism(kept)).localCheckpoint(eager=True)
     pairs = dd2.minhash_lsh_pairs(q2)
     curated = cl.dedup_representatives(q2, pairs, "doc_id", pair_a="id_a", pair_b="id_b")
     return curated.select(

@@ -207,17 +207,15 @@ def _sql_bpe_encode(num_merges: int = 8) -> str:
 
 @register("doc_bpe_encode", _sql_bpe_encode())
 def doc_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer APPLICATION: learn 8 BPE merges (datapipe.bpe.bpe_learn),
-    then encode every document through the ordered merge chain as a pure
+    """Tokenizer APPLICATION: learn 8 BPE merges on the driver
+    (datapipe.bpe.bpe_merges, one collect of the vocab table), then
+    encode every document through the ordered merge chain as a pure
     replace-expression pipeline (bpe_segment) — (doc_id, n_tokens,
-    n_pieces). The merge list crossing the driver is bounded (8 rows)."""
-    from imposm3_spark.datapipe.bpe import bpe_learn, bpe_segment
+    n_pieces)."""
+    from imposm3_spark.datapipe.bpe import bpe_merges, bpe_segment
 
     docs = _t(spark, sf_dir, "documents")
-    merges = [
-        (r["left"], r["right"])
-        for r in bpe_learn(docs, num_merges=8).orderBy("step").collect()
-    ]
+    merges = [(left, right) for _, left, right, _, _ in bpe_merges(docs, num_merges=8)]
     return bpe_segment(docs, merges)
 
 
@@ -454,9 +452,10 @@ def doc_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("emb_pca_top", __import__("imposm3_spark.datapipe.pca", fromlist=["oracle_sql"]).oracle_sql(iterations=3, dim=64))
 def emb_pca_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top principal direction of the embedding table: exact integer Gram
-    (one corpus pass, map-side numpy matmul) + 3 integer power-iteration
-    steps with L-infinity fixed-point normalization — bit-identical to
-    the unrolled oracle (see datapipe/pca.py)."""
+    and row count (one corpus pass, map-side numpy matmul, one collect of
+    the 64x64 Gram) + 3 integer power-iteration steps on the driver with
+    L-infinity fixed-point normalization — bit-identical to the unrolled
+    oracle (see datapipe/pca.py)."""
     from imposm3_spark.datapipe.pca import top_component
 
     return top_component(_t(spark, sf_dir, "embeddings"), iterations=3, dim=64)

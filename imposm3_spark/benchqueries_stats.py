@@ -573,9 +573,9 @@ def _sql_bpe(num_merges: int = 8) -> str:
 @register("doc_bpe_merges", _sql_bpe())
 def doc_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE tokenizer induction: 8 learned merges over the
-    corpus vocabulary (datapipe.bpe.bpe_learn). One corpus scan; every
-    iteration runs on the vocab-sized table with a LIMIT-1 argmax as the
-    only driver crossing."""
+    corpus vocabulary (datapipe.bpe.bpe_learn). One corpus scan builds
+    the vocab table, which crosses to the driver once; the merge loop
+    runs there, bounded by the distinct-word count."""
     from imposm3_spark.datapipe.bpe import bpe_learn
 
     return bpe_learn(_t(spark, sf_dir, "documents"), num_merges=8)

@@ -8,14 +8,15 @@ pair everywhere. The artifact is the ordered merge list — the tokenizer.
 
 Scale shape (the part that matters at 100 TB):
 - the CORPUS is scanned exactly once, to build the word-frequency table
-  (one map-side-combinable groupBy). Everything after runs on the vocab
-  table — bounded by distinct-word count, not corpus size.
-- each merge iteration is one distributed pair-count aggregate over the
-  vocab plus a LIMIT-1 argmax (a single row crosses the driver per
-  iteration — bounded by construction).
-- the merge application is a literal string `replace` — a pure JVM
-  expression; the vocab table is re-checkpointed every few iterations so
-  lineage stays shallow.
+  (one map-side-combinable groupBy) and spell each distinct word.
+- the driver collects that vocab table once (one spelled string per
+  distinct word: bounded by the vocabulary, not the corpus) and runs the
+  merge loop in Python — the vocabulary-on-the-driver shape of Spark
+  MLlib's Word2Vec and CountVectorizer and of the classic Sennrich,
+  SentencePiece and HF trainers.
+- the merge is a literal string replace, left to right without overlap,
+  in the driver loop (str.replace) and in the encode pass (a pure JVM
+  expression, bpe_segment) alike.
 
 Determinism: ties break (count desc, pair asc); the merge application
 is classic BPE's left-to-right greedy sweep, realized as ONE plain
@@ -34,6 +35,8 @@ left-to-right pass IS the classic greedy sweep.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -56,16 +59,14 @@ def _spell(word: Column) -> Column:
     )
 
 
-def _merge_pair(spelled: Column, pair: str, merged: str) -> Column:
-    """Merge every adjacent (left, right) into the merged symbol — one
+def _merge_pair(spelled: Column, left: str, right: str) -> Column:
+    """Merge every adjacent (left, right) into one symbol — one
     left-to-right non-overlapping replace == the classic BPE sweep (see
-    _spell; `pair` is the single-space 'l r' form used in pair counts).
-    Replacing ' l  r ' with ' lr ' restores the double-separator
+    _spell). Replacing ' l  r ' with ' lr ' restores the double-separator
     invariant: the two untouched outer half-spaces complete ' lr ' to
     '  lr  '."""
-    left, right = pair.split(" ")
     return F.replace(
-        spelled, F.lit(f" {left}  {right} "), F.lit(f" {merged} ")
+        spelled, F.lit(f" {left}  {right} "), F.lit(f" {left}{right} ")
     )
 
 
@@ -79,55 +80,48 @@ def word_freqs(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _pair_counts(vocab: DataFrame) -> DataFrame:
-    """Adjacent-symbol pair counts weighted by word frequency."""
-    sym = F.split(F.trim(F.col("spelled")), "  ")
-    n = F.size(sym)
-    pairs = F.zip_with(
-        F.slice(sym, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(sym, 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-    return (
-        vocab.select(F.explode(pairs).alias("p"), F.col("cnt"))
-        .groupBy("p")
-        .agg(F.sum("cnt").alias("c"))
-    )
-
-
-def bpe_learn(
-    df: DataFrame,
-    text_col: str = "text",
-    num_merges: int = 8,
-    checkpoint_every: int = 4,
-) -> DataFrame:
-    """Learn `num_merges` BPE merges; returns the ordered merge table
+def bpe_merges(
+    df: DataFrame, text_col: str = "text", num_merges: int = 8
+) -> list[tuple[int, str, str, str, int]]:
+    """Learn `num_merges` BPE merges; returns the ordered merge list
     (step, left, right, merged, pair_count) — step 0 is the first merge.
 
-    Stops early if no adjacent pair remains (fully merged vocab)."""
-    spark = df.sparkSession
-    vocab = word_freqs(df, text_col).select(
-        _spell(F.col("w")).alias("spelled"), "cnt"
-    )
-    vocab = vocab.localCheckpoint(eager=False)
+    Ties break on (-count, 'left right') in code-point order, which is
+    Spark's UTF-8 binary string order. Stops early if no adjacent pair
+    remains (fully merged vocab)."""
+    vocab = [
+        (r["spelled"], int(r["cnt"]))
+        for r in word_freqs(df, text_col)
+        .select(_spell(F.col("w")).alias("spelled"), "cnt")
+        .collect()
+    ]
     merges: list[tuple[int, str, str, str, int]] = []
     for step in range(num_merges):
-        best = _pair_counts(vocab).orderBy(F.desc("c"), F.asc("p")).limit(1).collect()
-        if not best:
+        counts: Counter[str] = Counter()
+        for spelled, cnt in vocab:
+            sym = spelled.strip(" ").split("  ")
+            for a, b in zip(sym, sym[1:]):
+                counts[f"{a} {b}"] += cnt
+        if not counts:
             break
-        pair, cnt = best[0]["p"], int(best[0]["c"])
+        pair, cnt = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
         left, right = pair.split(" ")
         merged = left + right
         merges.append((step, left, right, merged, cnt))
-        vocab = vocab.withColumn(
-            "spelled", _merge_pair(F.col("spelled"), pair, merged)
-        )
-        # shallow lineage: re-checkpoint periodically (each checkpoint is
-        # one job over the vocab-sized table)
-        if (step + 1) % checkpoint_every == 0:
-            vocab = vocab.localCheckpoint(eager=False)
-    return spark.createDataFrame(
-        merges, "step int, left string, right string, merged string, pair_count bigint"
+        vocab = [
+            (spelled.replace(f" {left}  {right} ", f" {merged} "), c)
+            for spelled, c in vocab
+        ]
+    return merges
+
+
+def bpe_learn(
+    df: DataFrame, text_col: str = "text", num_merges: int = 8
+) -> DataFrame:
+    """bpe_merges as a table (step, left, right, merged, pair_count)."""
+    return df.sparkSession.createDataFrame(
+        bpe_merges(df, text_col, num_merges),
+        "step int, left string, right string, merged string, pair_count bigint",
     )
 
 
@@ -145,7 +139,7 @@ def bpe_segment(
     def encode_word(w: Column) -> Column:
         s = _spell(w)
         for left, right in merges:
-            s = _merge_pair(s, f"{left} {right}", f"{left}{right}")
+            s = _merge_pair(s, left, right)
         return F.size(F.split(F.trim(s), "  "))
 
     toks = tokens(F.lower(F.col(text_col)))

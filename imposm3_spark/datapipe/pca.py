@@ -19,17 +19,20 @@ Why it hash-matches a SQL oracle exactly
   order-free sums), then L-infinity normalization with integer division
   ``v' = u div (max|u| div VSCALE)`` — divide-by-quotient instead of
   multiply-then-divide so no intermediate exceeds |u| (BIGINT-safe), no
-  sqrt, no floats; Spark's ``div`` truncation matches DuckDB's ``//``
-  for negatives too (both truncate toward zero; verified).
+  sqrt, no floats. Every division truncates toward zero, as DuckDB's
+  ``//`` and Spark's ``div`` do (Python's ``//`` floors, so the driver
+  steps use ``_tdiv``); Gram entries and ``u`` can be negative.
 * Start vector all-ones fixes the sign deterministically.
 
 Scale design (100 TB)
 ---------------------
 
-* ONE corpus pass builds the Gram (map-side numpy matmul per Arrow
-  batch, dim^2 partial rows per task — bounded by dim, not rows).
-* Iterations run on the dim^2-row Gram against the dim-row vector —
-  broadcast-sized joins, zero driver collects in the loop.
+* ONE corpus pass builds the Gram and counts the rows (map-side numpy
+  matmul per Arrow batch, dim^2 partial rows plus one count row per
+  task — bounded by dim, not rows).
+* The driver collects the summed Gram once and runs the power steps in
+  Python integers: it holds dim^2 BIGINTs, bounded by the model, never
+  by the corpus (a Spark loop paid two jobs per step for a 64x64 matvec).
 * Overflow headroom is row-count-INDEPENDENT: the summed Gram is
   divided by n (exact integer division — the mean outer product, same
   eigenvectors) before iterating, so |G'| <= QSCALE^2 and each matvec
@@ -47,19 +50,21 @@ QSCALE = 1_000
 VSCALE = 1_000_000
 
 
-def gram_matrix(
-    emb: DataFrame, vec_col: str = "embedding", dim: int | None = None
-) -> DataFrame:
-    """Exact integer Gram matrix of the quantized vectors: (i, j, g) with
-    1-based dimension indices."""
+def _dim(emb: DataFrame, vec_col: str, dim: int | None) -> int:
+    if dim is not None:
+        return dim
+    head = emb.select(F.size(F.col(vec_col)).alias("d")).head()
+    if head is None:
+        raise ValueError("empty embedding table")
+    return int(head["d"])
+
+
+def _partial_grams(emb: DataFrame, vec_col: str, dim: int) -> DataFrame:
+    """Per-task partial Grams (i, j, g) with 1-based dimension indices,
+    plus one (0, 0, rows) count row per task: the Gram and its
+    normalizer n come from the same corpus pass."""
     import numpy as np
     import pandas as pd
-
-    if dim is None:
-        head = emb.select(F.size(F.col(vec_col)).alias("d")).head()
-        if head is None:
-            raise ValueError("empty embedding table")
-        dim = int(head["d"])
 
     q = F.transform(
         F.col(vec_col),
@@ -70,22 +75,36 @@ def gram_matrix(
 
     def partial(batches):
         acc = np.zeros((d, d), dtype=np.int64)
-        seen = False
+        rows = 0
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            seen = True
+            rows += len(pdf)
             X = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["q"]])
             acc += X.T @ X
-        if seen:
+        if rows:
             ii, jj = np.meshgrid(np.arange(1, d + 1), np.arange(1, d + 1), indexing="ij")
             yield pd.DataFrame(
-                {"i": ii.ravel().astype("int32"), "j": jj.ravel().astype("int32"),
-                 "g": acc.ravel()}
+                {"i": np.append(ii.ravel(), 0).astype("int32"),
+                 "j": np.append(jj.ravel(), 0).astype("int32"),
+                 "g": np.append(acc.ravel(), rows)}
             )
 
-    parts = src.mapInPandas(partial, "i int, j int, g long")
-    return parts.groupBy("i", "j").agg(F.sum("g").alias("g"))
+    return src.mapInPandas(partial, "i int, j int, g long")
+
+
+def gram_matrix(
+    emb: DataFrame, vec_col: str = "embedding", dim: int | None = None
+) -> DataFrame:
+    """Exact integer Gram matrix of the quantized vectors: (i, j, g) with
+    1-based dimension indices."""
+    parts = _partial_grams(emb, vec_col, _dim(emb, vec_col, dim))
+    return parts.filter(F.col("i") > 0).groupBy("i", "j").agg(F.sum("g").alias("g"))
+
+
+def _tdiv(a: int, b: int) -> int:
+    """a div b (b > 0), truncating toward zero like DuckDB's ``//``."""
+    return -(-a // b) if a < 0 else a // b
 
 
 def top_component(
@@ -96,43 +115,23 @@ def top_component(
 ) -> DataFrame:
     """Top principal direction after `iterations` integer power steps:
     (i, loading) with loading = v_i / VSCALE as one fixed division."""
-    if dim is None:
-        head = emb.select(F.size(F.col(vec_col)).alias("d")).head()
-        if head is None:
-            raise ValueError("empty embedding table")
-        dim = int(head["d"])
-
-    spark = emb.sparkSession
-    n = emb.count()  # one bounded scalar: the Gram normalizer
-    # ONE corpus pass, materialized: every iteration re-reads the dim^2
-    # Gram cache, never the source (without this the lazy lineage would
-    # re-derive the Gram — and re-scan the corpus — per iteration).
-    G = (
-        gram_matrix(emb, vec_col=vec_col, dim=dim)
-        .select("i", "j", F.expr(f"g div {max(n, 1)}").alias("g"))
-        .localCheckpoint(eager=True)
+    dim = _dim(emb, vec_col, dim)
+    parts = _partial_grams(emb, vec_col, dim).groupBy("i", "j").agg(F.sum("g"))
+    sums = {(i, j): g for i, j, g in parts.collect()}
+    n = sums.pop((0, 0), 0)
+    v: list[int] = []
+    if n:
+        dims = range(1, dim + 1)
+        G = [[_tdiv(sums[i, j], n) for j in dims] for i in dims]
+        v = [VSCALE] * dim
+        for _ in range(iterations):
+            u = [sum(g * x for g, x in zip(row, v)) for row in G]
+            scale = max(max(abs(x) for x in u) // VSCALE, 1)
+            v = [_tdiv(x, scale) for x in u]
+    vec = emb.sparkSession.createDataFrame(
+        list(enumerate(v, start=1)), "i int, v long"
     )
-    v = spark.createDataFrame(
-        [(i, VSCALE) for i in range(1, dim + 1)], "i int, v long"
-    )
-    for _ in range(iterations):
-        u = (
-            G.join(F.broadcast(v.withColumnRenamed("i", "j")), on="j")
-            .groupBy("i")
-            .agg(F.sum(F.col("g") * F.col("v")).alias("u"))
-            # dim rows; materialize so the max-abs branch and the update
-            # branch share one computation
-            .localCheckpoint(eager=True)
-        )
-        mx = u.agg(F.max(F.abs(F.col("u"))).alias("m"))
-        v = u.join(F.broadcast(mx)).select(
-            "i",
-            F.expr(
-                f"u div (CASE WHEN (m div {VSCALE}) = 0 THEN 1 "
-                f"ELSE m div {VSCALE} END)"
-            ).alias("v"),
-        )
-    return v.select(
+    return vec.select(
         "i",
         F.round(F.col("v").cast("double") / F.lit(float(VSCALE)), 6).alias(
             "loading"

@@ -69,10 +69,10 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     of a compute-amplifying kernel (per-character gram explodes, per-token
     higher-order md5 hashing, multi-regex scoring).
 
-    Parquet scans split by BYTES (spark.sql.files.maxPartitionBytes),
+    Parquet scans split by BYTES (the session's maxPartitionBytes),
     which is right when per-byte work is O(1) but wrong when the next
     operator multiplies work per byte 10-100x and the input fills fewer
-    splits than the cluster has cores: a sub-128 MB corpus is ONE task no
+    splits than the cluster has cores: a sub-split corpus is ONE task no
     matter how many cores idle (guide §2.5 input-skew class — measured at
     sf0.1: the winnowing gram+md5 stage 2.9 s on the 1-task scan, 0.5 s
     after the spread). The gate is METADATA-ONLY — the optimizer's size
@@ -89,25 +89,30 @@ def spread_small_input(df: DataFrame) -> DataFrame:
 
     if os.environ.get("SPARK_GRAFT_SPREAD") == "0":  # A/B kill switch
         return df
-    sc = df.sparkSession.sparkContext
-    cores = max(int(sc.defaultParallelism), 1)
+    spark = df.sparkSession
+    cores = max(int(spark.sparkContext.defaultParallelism), 1)
     if cores <= 1:
         return df
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
         est = int(str(plan.stats().sizeInBytes()))
-        tree = str(plan)
+        split = int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
     except Exception:
         return df
-    if est <= 0 or est > cores * (128 * 1024 * 1024):
+    if est <= 0 or est > cores * split:
         return df
-    # Idempotence guard for composed pipelines: a Repartition upstream
-    # means a spread already happened (don't pay a second exchange), and a
-    # LogicalRDD leaf is a checkpointed pin whose producer already chose
-    # the partitioning (in this codebase pins materialize from spread
-    # plans, so they inherit the parallel layout).
-    if "Repartition" in tree or "LogicalRDD" in tree:
-        return df
+    # Idempotence guard for composed pipelines, on node classes (a literal
+    # in a filter is no node): a Repartition upstream means a spread already
+    # happened (don't pay a second exchange), and a LogicalRDD leaf is a
+    # checkpointed pin whose producer already chose the partitioning (in
+    # this codebase pins materialize from spread plans).
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName().startswith(("Repartition", "LogicalRDD")):
+            return df
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
     return df.repartition(cores)
 
 

@@ -24,6 +24,11 @@ def get_spark(app_name: str = "imposm3-spark", master: str | None = None,
             pkg_root + (os.pathsep + existing if existing else "")
         )
 
+    # getOrCreate() would re-apply every conf below to a running session
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)

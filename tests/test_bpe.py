@@ -68,3 +68,12 @@ def test_encode_piece_count_monotone_in_merges(spark):
         if prev is not None:
             assert all(out[d] <= prev[d] for d in out)
         prev = out
+
+
+def test_bpe_learn_fires_at_most_four_jobs(spark, jobs_fired):
+    df = _docs(spark, ["low lower lowest low low newer new", "abab abab ab"])
+    rows, jobs = jobs_fired(
+        "bpe-learn", lambda: bpe_learn(df, num_merges=3).collect()
+    )
+    assert len(rows) == 3
+    assert 1 <= jobs <= 4

@@ -497,9 +497,9 @@ def test_contamination_score_broadcasts_eval_side(spark):
 
 
 def test_bpe_iterations_read_checkpoint_not_corpus(spark):
-    """BPE learning scans the corpus once: the vocab table is
-    checkpointed, so the final (post-iteration) job must contain no
-    parquet scan at all."""
+    """BPE learning scans the corpus once: the vocab table is collected
+    to the driver, so the merge table's own job must contain no parquet
+    scan at all."""
     from imposm3_spark.datapipe.bpe import bpe_learn, word_freqs
 
     docs = bq._t(spark, SF_DIR, "documents")
@@ -573,9 +573,9 @@ def test_auc_no_global_sort_single_partition_only_for_final_row(spark):
 
 
 def test_pca_one_corpus_pass_broadcast_iterations(spark):
-    """PCA: the parquet source is scanned once (the Gram pass); every
-    power-iteration join broadcasts the dim-row vector side — no
-    sort-merge join, no cartesian."""
+    """PCA: the parquet source is scanned once (the Gram pass, collected
+    to the driver for the power steps); the returned plan has no
+    sort-merge join and no cartesian."""
     plan = _executed_plan(bq.QUERIES["emb_pca_top"](spark, SF_DIR))
     final = plan.split("== Initial Plan ==")[0]
     assert plan.count("Scan parquet") <= 1

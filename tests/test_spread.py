@@ -65,3 +65,22 @@ def test_winnow_pairs_values_invariant_under_spread(spark, docs):
     finally:
         os.environ.pop("SPARK_GRAFT_SPREAD", None)
     assert on == off and len(on) > 0
+
+
+def test_spread_ignores_node_names_in_literals(spark, docs):
+    """The idempotence guard reads plan node classes: a fresh scan filtered
+    on a literal that spells a node name is still spread."""
+    out = spread_small_input(docs.filter(F.col("text") != "Repartition LogicalRDD"))
+    top = out._jdf.queryExecution().optimizedPlan()
+    assert top.getClass().getSimpleName() == "Repartition"
+
+
+def test_spread_split_size_read_from_session(spark, docs):
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")  # every scan now fills its splits: no spread
+    try:
+        out = spread_small_input(docs)
+    finally:
+        spark.conf.set(key, old)
+    assert out is docs
