@@ -210,6 +210,14 @@ def _load_state(spark, out: str):
     )
 
 
+def _write_state_and_tables(out: str, state, tables: dict) -> None:
+    """Swap-write the tables and _state of the CLI's parquet layout."""
+    for name, df in tables.items():
+        _swap_write(df, str(Path(out) / name))
+    for sub, df in zip(STATE_DIRS, (state.nodes, state.ways, state.relations)):
+        _swap_write(df, str(Path(out) / "_state" / sub))
+
+
 def cmd_diff(args, files: list[str]) -> int:
     from imposm3_spark.diff.runner import apply_change_rows
     from imposm3_spark.mapping.config import load_mapping
@@ -229,10 +237,7 @@ def cmd_diff(args, files: list[str]) -> int:
         state, tables, _, _ = apply_change_rows(spark, pipe, state, tables, None, read_osc_rows(f))
         print(f"applied {f}")
 
-    for name, df in tables.items():
-        _swap_write(df, str(Path(out) / name))
-    for sub, df in zip(STATE_DIRS, (state.nodes, state.ways, state.relations)):
-        _swap_write(df, str(Path(out) / "_state" / sub))
+    _write_state_and_tables(out, state, tables)
     return 0
 
 
@@ -264,13 +269,12 @@ def cmd_run(args) -> int:
         expire_dir=args.expiretiles_dir or None,
         expire_zoom=getattr(args, "expiretiles_zoom", 0) or 14,
         downloader=downloader,
+        # every batch lands on disk before its sequence is checkpointed;
+        # the step pins its output, so the swap never reads the files it
+        # replaces
+        publish=lambda st, tables: _write_state_and_tables(out, st, tables),
     )
     applied = runner.run(max_batches=args.max_batches, poll_interval=args.poll_interval)
-    for name, df in runner.tables.items():
-        _swap_write(df, str(Path(out) / name))
-    st = runner.state
-    for sub, df in zip(STATE_DIRS, (st.nodes, st.ways, st.relations)):
-        _swap_write(df, str(Path(out) / "_state" / sub))
     print(f"applied {applied} sequences")
     return 0
 

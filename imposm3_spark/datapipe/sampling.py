@@ -26,6 +26,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# spread_small_input's switch; the tests turn it off to show the spread
+# leaves operator values unchanged
+SPREAD_SMALL_INPUTS = True
+
 
 def plan_parallelism(df: DataFrame, bytes_per_partition: int = 64 * 1024 * 1024) -> int:
     """Partition count for the two-phase prefix-sum exchanges WITHOUT
@@ -85,9 +89,7 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     Every caller's values are partitioning-invariant (per-row kernels +
     keyed re-aggregation downstream), and round-robin repartition is
     retry-safe (sortBeforeRepartition is on by default)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SPREAD") == "0":  # A/B kill switch
+    if not SPREAD_SMALL_INPUTS:
         return df
     spark = df.sparkSession
     cores = max(int(spark.sparkContext.defaultParallelism), 1)

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import gc
 import time
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -191,6 +192,10 @@ class ReplicationRunner:
     # every batch; `resume()` reloads it, so a restarted runner continues
     # from last.state.txt with id-bucketed (shuffle-free-join) state
     state_store: "object | None" = None
+    # optional publish(state, tables): writes the batch's pinned output
+    # before its sequence is checkpointed, so a killed runner restarts on
+    # the data of every batch last.state.txt counts (`imposm3_spark run`)
+    publish: "Callable[[OsmState, dict[str, DataFrame]], None] | None" = None
     # optional diff/download.DiffDownloader: when the next sequence is not
     # in diff_dir yet, fetch it from the remote feed first (`imposm run`
     # against a live replication endpoint, update/cmd.go:48-257)
@@ -233,6 +238,10 @@ class ReplicationRunner:
             self.state_store.save(self.state)
             self.state = self.state_store.load()
             stage_secs["store"] = round(time.perf_counter() - t0, 3)
+        if self.publish is not None:
+            t0 = time.perf_counter()
+            self.publish(self.state, self.tables)
+            stage_secs["publish"] = round(time.perf_counter() - t0, 3)
         write_state_txt(self.state_file, seq)
         self.last_stage_secs = stage_secs
         # drop the py4j handles of the replaced state/tables promptly so

@@ -213,7 +213,10 @@ def rebuild_tables(
 
     Closure: frontier rels -> their way/node members; (frontier ∪ member)
     ways -> their refs. All broadcast sets are blast-radius-bounded (a
-    batch's elements × mean way length)."""
+    batch's elements × mean way length). Only the rels, needed ways and
+    needed nodes are pinned: each id set is read once, as the broadcast
+    side of the next semi join, which ignores duplicate keys, so the sets
+    are neither deduplicated nor pinned."""
     # explicit broadcast: frontier.rel_ids is a checkpointed RDD scan with
     # no size statistics, so the planner fell back to SortMergeJoin and
     # shuffled the ENTIRE relations state (with its members arrays) per
@@ -232,9 +235,7 @@ def rebuild_tables(
         .filter(F.col("m.type") == 1)
         .select(F.col("m.id").alias("id"))
     )
-    way_ids = (
-        frontier.way_ids.unionByName(member_way_ids).distinct().localCheckpoint()
-    )
+    way_ids = frontier.way_ids.unionByName(member_way_ids)
     needed_ways = new_state.ways.join(
         maybe_bcast(way_ids), "id", "leftsemi"
     ).localCheckpoint()
@@ -249,8 +250,6 @@ def rebuild_tables(
         needed_ways.select(F.explode("refs").alias("id"))
         .unionByName(member_node_ids)
         .unionByName(frontier.node_ids)
-        .distinct()
-        .localCheckpoint()
     )
     needed_nodes = new_state.nodes.join(
         maybe_bcast(ref_ids), "id", "leftsemi"

@@ -26,3 +26,18 @@ def jobs_fired(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def codegen_compiles(spark):
+    """codegen_compiles(fn) runs fn() and returns (fn's result, the number
+    of generated classes the JVM compiled meanwhile, from Spark's
+    CodegenMetrics)."""
+    timer = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run(fn):
+        before = timer.getCount()
+        out = fn()
+        return out, timer.getCount() - before
+
+    return run

@@ -23,6 +23,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType
 
 from imposm3_spark import cli
 from imposm3_spark.diff import runner as runner_mod
@@ -121,14 +122,20 @@ OSC_1 = (
     + "<modify>" + _node_xml(40, 10.031, 50.031, CAFE) + "</modify>"
     + "</osmChange>"
 )
-# node 6 of inner ring 102 and node 12 of closed way 104 move; relation 2
-# is deleted
-OSC_2 = (
-    "<osmChange><modify>"
-    + _node_xml(6, 10.0065, 50.0035)
-    + _node_xml(12, 10.031, 50.001)
-    + '</modify><delete><relation id="2"/></delete></osmChange>'
-)
+
+
+def _move_ring_nodes(lon6: float, lon12: float) -> str:
+    """Node 6 of inner ring 102 and node 12 of closed way 104 move; relation
+    2 is deleted."""
+    return (
+        "<osmChange><modify>"
+        + _node_xml(6, lon6, 50.0035)
+        + _node_xml(12, lon12, 50.001)
+        + '</modify><delete><relation id="2"/></delete></osmChange>'
+    )
+
+
+OSC_2 = _move_ring_nodes(10.0065, 10.031)
 FRONTIERS = [
     {"node_ids": [2, 21, 22, 23, 24, 40], "way_ids": [101, 103, 106], "rel_ids": [1, 2]},
     {"node_ids": [6, 12], "way_ids": [102, 104], "rel_ids": [1, 2]},
@@ -138,10 +145,20 @@ RING_NEW = [RING_OLD[0], (10.012, 50.001)] + RING_OLD[2:]
 
 
 def _digests(tables: dict) -> dict:
-    """Sorted per-row xxhash64 over all columns, per table."""
+    """Sorted per-row xxhash64 over all columns, per table (a map column,
+    which Spark does not hash, as its sorted entries)."""
+
+    def col(field):
+        if isinstance(field.dataType, MapType):
+            return F.array_sort(F.map_entries(field.name))
+        return F.col(field.name)
+
     return {
         name: sorted(
-            r[0] for r in df.select(F.xxhash64(*sorted(df.columns))).collect()
+            r[0]
+            for r in df.select(
+                F.xxhash64(*[col(f) for f in sorted(df.schema, key=lambda f: f.name)])
+            ).collect()
         )
         for name, df in tables.items()
     }
@@ -175,7 +192,7 @@ def imported(spark):
     return mapping, pipe, state, tables, gens
 
 
-def test_runner_and_stream_batches(spark, imported, tmp_path, monkeypatch):
+def test_runner_and_stream_batches(spark, imported, tmp_path, monkeypatch, codegen_compiles):
     mapping, pipe, state, tables, gens = imported
     diff_dir = tmp_path / "diffs"
     diff_dir.mkdir()
@@ -237,37 +254,99 @@ def test_runner_and_stream_batches(spark, imported, tmp_path, monkeypatch):
     assert runner.tables["roads"].count() == 0
     assert sorted(r["osm_id"] for r in runner.tables["landusages"].collect()) == [-1, 104]
 
+    # two more batches of OSC_2's shape: once warm, a batch runs on the
+    # plan classes the previous one compiled (the session's codegen cache
+    # holds a batch's working set, ~310 classes here)
+    for seq, (lon6, lon12) in ((3, (10.0066, 10.032)), (4, (10.0067, 10.033))):
+        (diff_dir / f"{seq}.osc").write_text(_move_ring_nodes(lon6, lon12))
+    assert runner.apply_one(3)
+    applied, compiles = codegen_compiles(lambda: runner.apply_one(4))
+    assert applied and compiles <= 20
 
-def test_cli_diff_matches_runner(spark, imported, tmp_path, monkeypatch):
-    """`imposm3_spark diff` over the CLI's parquet layout (<out>/<table>,
-    <out>/_state/<kind>) ends where the runner ends after both files."""
-    mapping, pipe, state, tables, _ = imported
+
+def _diff_dir(tmp_path):
+    diff_dir = tmp_path / "diffs"
+    diff_dir.mkdir()
+    for seq, text in enumerate((OSC_1, OSC_2), start=1):
+        (diff_dir / f"{seq}.osc").write_text(text)
+    return diff_dir
+
+
+def _cli_layout(tmp_path, state: OsmState, tables: dict):
+    """The CLI's parquet layout of the import (<out>/<table>,
+    <out>/_state/<kind>), its mapping file and a diff dir with both files."""
     out = tmp_path / "out"
     for name, df in tables.items():
         df.write.parquet(str(out / name))
     for sub, df in zip(cli.STATE_DIRS, (state.nodes, state.ways, state.relations)):
         df.write.parquet(str(out / "_state" / sub))
     (tmp_path / "mapping.yml").write_text(MAPPING)
-    diff_dir = tmp_path / "diffs"
-    diff_dir.mkdir()
-    for seq, text in enumerate((OSC_1, OSC_2), start=1):
-        (diff_dir / f"{seq}.osc").write_text(text)
+    return out, tmp_path / "mapping.yml", _diff_dir(tmp_path)
 
-    # the CLI's own session builder would reconfigure the shared test session
-    monkeypatch.setattr(cli, "_build_spark", lambda args: spark)
-    rc = cli.main(
-        ["diff", "-mapping", str(tmp_path / "mapping.yml"), "-write-parquet", str(out)]
-        + [str(diff_dir / f"{seq}.osc") for seq in (1, 2)]
-    )
-    assert rc == 0
 
+@pytest.fixture(scope="module")
+def uninterrupted(spark, imported, tmp_path_factory):
+    """A runner after both files, applied without interruption."""
+    _, pipe, state, tables, _ = imported
+    tmp_path = tmp_path_factory.mktemp("uninterrupted")
+    diff_dir = _diff_dir(tmp_path)
     runner = ReplicationRunner(
         spark=spark, pipe=pipe, state=state, tables=dict(tables), diff_dir=str(diff_dir),
         state_file=str(tmp_path / "last.state.txt"),
     )
     assert runner.run() == 2
+    return runner
+
+
+def test_cli_diff_matches_runner(spark, imported, tmp_path, uninterrupted):
+    """`imposm3_spark diff` over the CLI's parquet layout ends where the
+    runner ends after both files."""
+    _, _, state, tables, _ = imported
+    out, mapping, diff_dir = _cli_layout(tmp_path, state, tables)
+
+    rc = cli.main(
+        ["diff", "-mapping", str(mapping), "-write-parquet", str(out)]
+        + [str(diff_dir / f"{seq}.osc") for seq in (1, 2)]
+    )
+    assert rc == 0
+
     written = {name: spark.read.parquet(str(out / name)) for name in tables}
-    assert _digests(written) == _digests(runner.tables)
+    assert _digests(written) == _digests(uninterrupted.tables)
+
+
+class Killed(Exception):
+    pass
+
+
+def test_cli_run_restart_after_kill(spark, imported, tmp_path, monkeypatch, uninterrupted):
+    """`imposm3_spark run` killed inside batch 2 and restarted writes the
+    tables and state of an uninterrupted run: batch 1 was on disk before
+    last.state.txt counted it."""
+    _, _, state, tables, _ = imported
+    out, mapping, diff_dir = _cli_layout(tmp_path, state, tables)
+    argv = ["run", "-mapping", str(mapping), "-write-parquet", str(out), "-diffdir", str(diff_dir)]
+
+    step = runner_mod.apply_change_rows
+    calls = []
+
+    def killed_in_batch_2(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise Killed
+        return step(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(runner_mod, "apply_change_rows", killed_in_batch_2)
+        with pytest.raises(Killed):
+            cli.main(argv)
+    assert cli.main(argv) == 0
+
+    written = {name: spark.read.parquet(str(out / name)) for name in tables}
+    assert _digests(written) == _digests(uninterrupted.tables)
+    st = uninterrupted.state
+    kinds = dict(zip(cli.STATE_DIRS, (st.nodes, st.ways, st.relations)))
+    written = {sub: spark.read.parquet(str(out / "_state" / sub)) for sub in kinds}
+    assert _digests(written) == _digests(kinds)
 
 
 def test_stream_applies_files_in_sequence_order():

@@ -3,7 +3,7 @@ of compute-amplifying text kernels.
 
 Pins the helper's contract: fires on a sub-split scan, is idempotent
 across composed operators (Repartition upstream), defers to a
-checkpointed pin's producer (LogicalRDD), honors the A/B kill switch —
+checkpointed pin's producer (LogicalRDD), honors the off switch —
 and leaves operator VALUES untouched (the winnow pair set is identical
 with the spread on and off)."""
 
@@ -12,6 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from imposm3_spark.datapipe import sampling
 from imposm3_spark.datapipe.sampling import spread_small_input
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
@@ -41,17 +42,14 @@ def test_spread_defers_to_checkpoint_producer(spark, docs):
     assert "Repartition" not in plan  # the pin's layout is kept as-is
 
 
-def test_spread_kill_switch(spark, docs):
-    os.environ["SPARK_GRAFT_SPREAD"] = "0"
-    try:
-        out = spread_small_input(docs)
-        plan = out._jdf.queryExecution().optimizedPlan().toString()
-        assert "Repartition" not in plan
-    finally:
-        os.environ.pop("SPARK_GRAFT_SPREAD", None)
+def test_spread_kill_switch(spark, docs, monkeypatch):
+    monkeypatch.setattr(sampling, "SPREAD_SMALL_INPUTS", False)
+    out = spread_small_input(docs)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Repartition" not in plan
 
 
-def test_winnow_pairs_values_invariant_under_spread(spark, docs):
+def test_winnow_pairs_values_invariant_under_spread(spark, docs, monkeypatch):
     from imposm3_spark.datapipe import simjoin as sj
 
     def rows():
@@ -59,11 +57,8 @@ def test_winnow_pairs_values_invariant_under_spread(spark, docs):
         return sorted((r["id_a"], r["id_b"], r["shared"]) for r in got)
 
     on = rows()
-    os.environ["SPARK_GRAFT_SPREAD"] = "0"
-    try:
-        off = rows()
-    finally:
-        os.environ.pop("SPARK_GRAFT_SPREAD", None)
+    monkeypatch.setattr(sampling, "SPREAD_SMALL_INPUTS", False)
+    off = rows()
     assert on == off and len(on) > 0
 
 
