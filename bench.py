@@ -3,10 +3,10 @@
 
 Output contract (driver captures the stdout TAIL): the FINAL stdout line
 is the compact JSON summary {"metric", "value", "unit", "n_queries",
-"sf", "import"} — "import" carries the e2e OSM import bench (wall,
-per-stage secs, elements/s; see imposm3_spark/benchimport.py); the line
-above it is {"queries": {name: sec}} for human runs; the full
-summary+detail is also written to BENCH_DETAIL.json next to this file.
+"sf"}; the line above it is {"queries": {name: sec}} for human runs; the
+per-query timings are also written to BENCH_DETAIL.json next to this
+file. The end-to-end import and replication benchmark is
+perfbench/run.py.
 """
 
 from __future__ import annotations
@@ -35,60 +35,8 @@ def _warm_udf():
     return _warm
 
 
-def _subprocess_bench(module: str) -> dict:
-    """Run an e2e bench module in its OWN JVM (warmup + best-of-2 inside,
-    `measured` mode) and parse its one-line JSON summary.
-
-    Isolation is the point: round 8 measured the 242-query loop at 2-3x
-    its true wall when it shared a JVM with the e2e benches' block-manager
-    and GC residue (emb_cluster_purity 3.9 s fresh vs 23.9 s aged), and
-    round 7 saw the same poisoning in the other direction (import sink
-    6 s -> 33 s after the query loop). Separate JVMs, serial on the box,
-    honest numbers for all three metrics."""
-    import subprocess
-    import sys
-
-    r = subprocess.run(
-        [sys.executable, "-m", module, "measured"],
-        capture_output=True,
-        text=True,
-        cwd=os.path.dirname(os.path.abspath(__file__)),
-        timeout=1500,
-    )
-    lines = [l for l in r.stdout.splitlines() if l.startswith("{")]
-    if r.returncode != 0 or not lines:
-        # surface the subprocess's actual failure, not an IndexError
-        tail = (r.stderr or r.stdout or "").strip().splitlines()[-3:]
-        raise RuntimeError(
-            f"{module} exited rc={r.returncode} without JSON; tail: "
-            + " / ".join(tail)
-        )
-    return json.loads(lines[-1])
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    # e2e benches FIRST, each in its own subprocess JVM, before this
-    # process creates its session — the box runs one JVM at a time.
-    # SPARK_GRAFT_SKIP_E2E=1 runs only the query loop: repeated runs feed
-    # BENCH_HISTORY.jsonl medians (scripts/bench_medians.py) without
-    # paying the ~15 min of import/curate/diff e2e each time.
-    skip_e2e = os.environ.get("SPARK_GRAFT_SKIP_E2E") == "1"
-    import_summary = curate_summary = diff_summary = {"skipped": True}
-    if not skip_e2e:
-        try:
-            import_summary = _subprocess_bench("imposm3_spark.benchimport")
-        except Exception as exc:  # must never sink the query bench
-            import_summary = {"error": f"{type(exc).__name__}: {exc}"[:200]}
-        try:
-            curate_summary = _subprocess_bench("imposm3_spark.benchcurate")
-        except Exception as exc:
-            curate_summary = {"error": f"{type(exc).__name__}: {exc}"[:200]}
-        try:
-            diff_summary = _subprocess_bench("imposm3_spark.benchdiff")
-        except Exception as exc:
-            diff_summary = {"error": f"{type(exc).__name__}: {exc}"[:200]}
 
     spark = get_spark("imposm3-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -156,9 +104,6 @@ def main() -> None:
         "unit": "sec",
         "n_queries": len(timings),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "import": import_summary,
-        "curate": curate_summary,
-        "diff": diff_summary,
     }
     # The driver captures the TAIL of stdout, so the compact summary must
     # be the FINAL line (a 236-entry per-query dict printed after it would

@@ -201,7 +201,7 @@ class ReplicationRunner:
     # against a live replication endpoint, update/cmd.go:48-257)
     downloader: "object | None" = None
     # per-stage walls of the most recent apply_one (observability only;
-    # see imposm3_spark/benchdiff.py)
+    # nothing in the package reads them; for callers that log batches)
     last_stage_secs: dict = field(default_factory=dict)
 
     def current_sequence(self) -> int:

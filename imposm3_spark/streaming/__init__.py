@@ -1,4 +1,3 @@
 from imposm3_spark.streaming.replication import StreamingReplicator
-from imposm3_spark.streaming.windowed import windowed_event_counts
 
-__all__ = ["StreamingReplicator", "windowed_event_counts"]
+__all__ = ["StreamingReplicator"]

@@ -1,11 +1,11 @@
 """Capture `.explain("formatted")` output for named queries into
-plans/r10/<query>_<tag>.txt — the optimization round's before/after plan
-evidence. Optionally times each query in isolation with the noop sink
+plans/<round>/<query>_<tag>.txt — an optimization round's before/after
+plan evidence. Optionally times each query in isolation with the noop sink
 (guide §1.4: computes every column, no sink cost, no count() pruning).
 
 Usage:
-    python scripts/capture_plans_r10.py <tag> <query> [query ...]
-    python scripts/capture_plans_r10.py <tag> --top N       # N slowest by BENCH_HISTORY medians
+    python scripts/capture_plans.py <round> <tag> <query> [query ...]
+    python scripts/capture_plans.py <round> <tag> --top N   # N slowest by BENCH_HISTORY medians
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), PLAN_NOOP=1 to
 also run + time each query against the noop sink (3 trials, min).
 """
@@ -24,7 +24,6 @@ from imposm3_spark import benchqueries as bq  # noqa: E402
 from imposm3_spark.session import get_spark  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-OUT = os.path.join(REPO, "plans", "r10")
 
 
 def _top_from_history(n: int) -> list[str]:
@@ -41,15 +40,16 @@ def _top_from_history(n: int) -> list[str]:
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    if sys.argv[2] == "--top":
-        names = _top_from_history(int(sys.argv[3]))
+    round_, tag = sys.argv[1], sys.argv[2]
+    if sys.argv[3] == "--top":
+        names = _top_from_history(int(sys.argv[4]))
     else:
-        names = sys.argv[2:]
-    os.makedirs(OUT, exist_ok=True)
+        names = sys.argv[3:]
+    out = os.path.join(REPO, "plans", round_)
+    os.makedirs(out, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     noop = os.environ.get("PLAN_NOOP") == "1"
-    spark = get_spark("plan-capture-r10")
+    spark = get_spark(f"plan-capture-{round_}")
     spark.sparkContext.setLogLevel("ERROR")
     timings: dict[str, float] = {}
     for name in names:
@@ -58,7 +58,7 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        with open(os.path.join(OUT, f"{name}_{tag}.txt"), "w") as f:
+        with open(os.path.join(out, f"{name}_{tag}.txt"), "w") as f:
             f.write(plan)
         if noop:
             trials = []

@@ -10,9 +10,9 @@ bar is ratio < REPLICAS (sub-linear-per-row work — a quadratic path
 would come in at ~REPLICAS^2); quadratic-truth unsampled pair queries
 are expected to exceed it and are labeled as such.
 
-Replication design (mirrors benchcurate.synth_corpus — see its module
-docstring for why verbatim copies would measure a fixture artifact, not
-the engine):
+Replication design (verbatim copies would make every doc a near-dup of
+its siblings, so the LSH bucket join and the component pass would measure
+a quadratic artifact of the fixture, not the engine):
 
 * documents: each replica's text is a per-replica deterministic token
   permutation (xxhash64(token, pos, replica) sort key, doc_id excluded

@@ -162,8 +162,8 @@ def test_mapping_pushdown_matches_expression_prefilter(spark, pbf_path):
 
 def test_read_pbf_union_prefilter(spark):
     """read_pbf(mapping=[m1, m2]) keeps a tag if ANY mapping keeps it —
-    one parse can feed several pipelines (benchimport's geometry + route
-    passes) without re-reading the file."""
+    one parse can feed several pipelines (e.g. a geometry and a route
+    pass) without re-reading the file."""
     from imposm3_spark.mapping.config import load_mapping
     from imposm3_spark.sources.pbf import read_pbf
 

@@ -1,7 +1,6 @@
 """Property-based tests for round-4 session-2 operators: global cumsums
 under random partitioning, Kendall tau-b vs brute force, k-core peel vs
-a sequential reference, Gini vs the direct formula, and streaming-CUSUM
-reference parity under random series."""
+a sequential reference, and Gini vs the direct formula."""
 
 from __future__ import annotations
 
@@ -141,55 +140,3 @@ def test_gini_matches_direct_formula(spark, vals):
     g = (2 * sum((i + 1) * v for i, v in enumerate(sv)) - (n + 1) * s) / (n * s)
     assert r.n_keys == n and r.total == s
     assert r.gini == round(g, 6)
-
-
-@given(
-    series=st_.lists(
-        st_.integers(min_value=0, max_value=3000), min_size=1, max_size=60
-    )
-)
-@settings(**SETTINGS)
-def test_cusum_reference_resets_and_bounds(series):
-    """Pure-reference invariants: statistics reset after every alarm, so
-    no reported stat can exceed h + the largest single increment."""
-    from imposm3_spark.datapipe.streaming_cusum import cusum_reference
-
-    mu0, k, h = 1000, 50, 500
-    rows = list(enumerate(series))
-    alarms = cusum_reference(rows, mu0, k, h)
-    max_step = max(abs(c - mu0) + k for c in series)
-    for _, _, stat in alarms:
-        assert stat * 100 <= h + max_step
-    # determinism
-    assert alarms == cusum_reference(rows, mu0, k, h)
-
-
-@given(
-    vals=st_.lists(
-        st_.one_of(
-            st_.floats(min_value=0.0, max_value=1e6, allow_nan=False),
-            # exact half-cent doubles and the classic +0.5-trick breaker
-            st_.sampled_from([10.125, 0.005, 2.675, 0.49999999999999994 / 100]),
-        ),
-        min_size=1,
-        max_size=50,
-    )
-)
-@settings(**SETTINGS)
-def test_half_up_cents_matches_spark_round(spark, vals):
-    """cents.half_up_cents must equal Spark's F.round(value*100) on every
-    double — including exact half-cent values where python round() gives
-    half-even and floor(x+0.5) mis-rounds."""
-    from pyspark.sql import functions as F
-
-    from imposm3_spark.datapipe.cents import half_up_cents
-
-    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "i long, v double")
-    got = {
-        r.i: r.c
-        for r in df.select(
-            "i", F.round(F.col("v") * 100).cast("bigint").alias("c")
-        ).collect()
-    }
-    for i, v in enumerate(vals):
-        assert got[i] == half_up_cents(v), (v,)
