@@ -526,7 +526,7 @@ def osm_way_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("p_partkey") % 20000) / 10.0).alias("x"),
         ((F.col("p_partkey") % 10000) / 10.0).alias("y"),
     )
-    resolved = resolve_way_coords(ways, coords, unique_ids=True)
+    resolved = resolve_way_coords(ways, coords)
     return resolved.select(
         F.col("id").alias("way_id"),
         F.size("coords").cast("long").alias("n_points"),
@@ -1063,7 +1063,7 @@ _SQL_SHINGLES = r"""list_transform(
 
 def _sql_minhash_bands(num_hashes: int = 8, rows_per_band: int = 2) -> str:
     # one md5 per shingle, sliced into num_hashes fixed-width sub-hashes
-    # (matches datapipe.dedup.minhash_signature)
+    # (matches datapipe.dedup._minhash_fold)
     width = 32 // num_hashes
     sig = ",\n             ".join(
         f"list_min(list_transform(mh, m -> substr(m, {1 + i * width}, {width}))) AS sig{i}"
@@ -1071,7 +1071,7 @@ def _sql_minhash_bands(num_hashes: int = 8, rows_per_band: int = 2) -> str:
     )
     bands = []
     for bi, b in enumerate(range(0, num_hashes, rows_per_band)):
-        # raw concat band key — mirrors datapipe.dedup.lsh_band_keys
+        # raw concat band key — mirrors datapipe.dedup.minhash_lsh_pairs
         # (injective on fixed-width slices, identical bucketing to the
         # round-2 md5 around it)
         parts = " || ".join(f"sig{b + r}" for r in range(rows_per_band))

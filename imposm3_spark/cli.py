@@ -234,7 +234,7 @@ def cmd_diff(args, files: list[str]) -> int:
     for f in files:
         # the step pins the new state and tables, so the swap below never
         # reads the files it replaces
-        state, tables, _, _ = apply_change_rows(spark, pipe, state, tables, None, read_osc_rows(f))
+        state, tables, _ = apply_change_rows(spark, pipe, state, tables, None, read_osc_rows(f))
         print(f"applied {f}")
 
     _write_state_and_tables(out, state, tables)

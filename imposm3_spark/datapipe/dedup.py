@@ -56,22 +56,6 @@ def shingles(text: Column, k: int = 3) -> Column:
     return out
 
 
-def minhash_signature(sh: Column, num_hashes: int = 8) -> list[Column]:
-    """num_hashes MinHash values: sig_i = min over shingles of the i-th
-    fixed-width slice of md5(s) — ONE md5 per shingle, split into
-    num_hashes sub-hashes (the standard one-strong-hash trick; the slices
-    are independent under the random-oracle assumption).
-
-    Hex-string min — lexicographic order on fixed-width hex equals numeric
-    order, and any engine with md5() reproduces it."""
-    width = 32 // num_hashes
-    mh = F.transform(sh, lambda s: F.md5(s))
-    return [
-        F.array_min(F.transform(mh, lambda m: m.substr(1 + i * width, width)))
-        for i in range(num_hashes)
-    ]
-
-
 def minhash_signatures_relational(
     df: DataFrame,
     text_col: str = "text",
@@ -89,7 +73,7 @@ def minhash_signatures_relational(
     all num_hashes mins in a single pass (struct accumulator of running
     mins; ``least`` skips the NULL init, so docs with no shingles keep
     NULL signatures exactly like the old per-column ``array_min``). ONE
-    md5 per shingle (sub-hash slices, see minhash_signature) instead of
+    md5 per shingle (sub-hash slices, see _minhash_fold) instead of
     num_hashes md5s. ZERO exchanges: the round-2 formulation repartitioned
     by doc id purely to materialize the md5 array against CollapseProject
     re-evaluation — the fold reads the array once by construction, so the
@@ -112,7 +96,13 @@ def _minhash_fold(
     with a struct accumulator of running per-slice mins. ``finish``
     optionally post-processes the accumulator INSIDE the aggregate — the
     caller then holds a single aggregate occurrence, which matters under
-    Generate (see minhash_lsh_pairs)."""
+    Generate (see minhash_lsh_pairs).
+
+    sig_i is the min over shingles of the i-th fixed-width slice of
+    md5(shingle): ONE md5 split into num_hashes sub-hashes (the slices are
+    independent under the random-oracle assumption). Hex-string min —
+    lexicographic order on fixed-width hex equals numeric order, so any
+    engine with md5() reproduces it."""
     width = 32 // num_hashes
     mh = F.transform(shingles(F.col(text_col), shingle_k), lambda s: F.md5(s))
     init = F.struct(
@@ -130,21 +120,6 @@ def _minhash_fold(
     if finish is None:
         return F.aggregate(mh, init, fold)
     return F.aggregate(mh, init, fold, finish)
-
-
-def lsh_band_keys(sig: list[Column], rows_per_band: int = 2) -> list[Column]:
-    """Band keys: the concatenated signature rows of each band.
-
-    The raw concat IS the band identity — the round-2 md5 around it bought
-    nothing (concat of fixed-width slices is injective, so equality of
-    concats is exactly equality of bands) and cost an md5 per doc*band
-    plus a 32-char shuffle key where 8 chars suffice. NULL propagation is
-    unchanged: concat is NULL if any slice is NULL, same as md5(concat)."""
-    assert len(sig) % rows_per_band == 0
-    keys = []
-    for b in range(0, len(sig), rows_per_band):
-        keys.append(F.concat(*sig[b : b + rows_per_band]))
-    return keys
 
 
 def minhash_lsh_pairs(
@@ -178,7 +153,8 @@ def minhash_lsh_pairs(
     # fold's finish lambda. Two round-9 findings drive this shape:
     # (1) raw concat band keys (injective on the fixed-width slices —
     #     identical bucketing to the round-2 md5(concat), minus the hash and
-    #     the 4x key bytes in the banding shuffle; see lsh_band_keys);
+    #     the 4x key bytes in the banding shuffle; a NULL slice still
+    #     makes the key NULL, as md5(concat) did);
     # (2) runtime subexpression elimination covers repeated aggregate
     #     references in a plain Project but NOT in a Generate input — 8
     #     references under posexplode re-ran the whole shingle+md5 fold 8x

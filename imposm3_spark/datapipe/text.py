@@ -203,23 +203,6 @@ def fingerprint(text: Column, ngram: int = 4) -> Column:
     return F.array_min(F.transform(shingles, F.md5))
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the standard text-analysis columns."""
-    t = F.col(text_col)
-    return df.withColumns(
-        {
-            "n_tokens": token_count(t),
-            "n_bpe_tokens": bpe_token_count(t),
-            "avg_token_len": avg_token_len(t),
-            "punct_ratio": punct_ratio(t),
-            "stopword_ratio_en": stopword_ratio(t),
-            "quality": quality_score(t),
-            "lang_guess": langid(t),
-            "fingerprint": fingerprint(t),
-        }
-    )
-
-
 # PII-scrub patterns — deliberately simple regexes valid in BOTH Java
 # (Spark) and RE2 (DuckDB/Go) dialects: no backrefs, no lookaround
 EMAIL_RE = "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}"

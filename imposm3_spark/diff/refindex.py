@@ -20,33 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def node_way_refs(ways: DataFrame) -> DataFrame:
-    """(node_id, way_id) for every ref of every way."""
-    return ways.select(
-        F.explode("refs").alias("node_id"), F.col("id").alias("way_id")
-    ).distinct()
-
-
-def node_rel_refs(relations: DataFrame) -> DataFrame:
-    """(node_id, rel_id) for node members (type 0)."""
-    return (
-        relations.select(F.col("id").alias("rel_id"), F.explode("members").alias("m"))
-        .filter(F.col("m.type") == 0)
-        .select(F.col("m.id").alias("node_id"), "rel_id")
-        .distinct()
-    )
-
-
-def way_rel_refs(relations: DataFrame) -> DataFrame:
-    """(way_id, rel_id) for way members (type 1)."""
-    return (
-        relations.select(F.col("id").alias("rel_id"), F.explode("members").alias("m"))
-        .filter(F.col("m.type") == 1)
-        .select(F.col("m.id").alias("way_id"), "rel_id")
-        .distinct()
-    )
-
-
 def dependent_ways(
     ways: DataFrame, changed_node_ids: DataFrame, hint: bool = True
 ) -> DataFrame:

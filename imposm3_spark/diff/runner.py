@@ -21,13 +21,15 @@ from __future__ import annotations
 
 import gc
 import time
+import urllib.error
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from imposm3_spark.diff.download import NotAvailable
 from imposm3_spark.diff.update import (
     OsmState,
     apply_batch,
@@ -107,47 +109,31 @@ def apply_change_rows(
     rows: list[tuple],
     expire_dir: str | None = None,
     expire_zoom: int = 14,
-) -> tuple[OsmState, dict[str, DataFrame], dict[str, DataFrame] | None, dict[str, float]]:
+) -> tuple[OsmState, dict[str, DataFrame], dict[str, DataFrame] | None]:
     """One replication batch: CHANGE_SCHEMA rows -> the pinned new state,
-    tables and generalized tables, plus per-stage walls. The one batch body
-    of ``ReplicationRunner``, ``StreamingReplicator`` and ``imposm3_spark
-    diff`` (update/cmd.go:81-257 is likewise one loop for all three).
-
-    Stage walls mark where the LAZY batch plan actually executes: state at
-    the change-set pin and the concurrent state and frontier pins;
-    frontier at the broadcast gate only (no job below the gate); rebuild at
-    the engine's shared-frontier pins; tables/gens at their
-    localCheckpoints; expire (concurrent with rebuild and tables) at its
-    geometry collect."""
-    stage_secs: dict[str, float] = {}
+    tables and generalized tables. The one batch body of
+    ``ReplicationRunner``, ``StreamingReplicator`` and ``imposm3_spark
+    diff`` (update/cmd.go:81-257 is likewise one loop for all three)."""
     changes = spark.createDataFrame(rows, CHANGE_SCHEMA)
     small = len(rows) <= DIFF_GATE
-    t0 = time.perf_counter()
     new_state, frontier = pin_state_and_frontier(state, changes, hint=small)
-    stage_secs["state"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
     hint = small or all(
         df.count() <= DIFF_BROADCAST_LIMIT
         for df in (frontier.node_ids, frontier.way_ids, frontier.rel_ids)
     )
-    stage_secs["frontier"] = round(time.perf_counter() - t0, 3)
 
-    def _expire() -> float:
-        t0 = time.perf_counter()
+    def _expire() -> None:
         expired_tile_list(
             pipe, state, new_state, frontier, max_zoom=expire_zoom, hint=hint
         ).flush(expire_dir)
-        return round(time.perf_counter() - t0, 3)
 
     # expiry depends only on (state, new_state, frontier) — all pinned
     # above — so it runs CONCURRENTLY with the rebuild and the table pins
-    # below; its wall is still recorded separately. Its result is read
-    # (and the pool left) even when the rebuild or a table pin raises
-    # mid-batch.
+    # below. Its result is read (and the pool left) even when the rebuild
+    # or a table pin raises mid-batch.
     with ThreadPoolExecutor(max_workers=1) as expire_pool:
         expire_future = expire_pool.submit(_expire) if expire_dir is not None else None
         try:
-            t0 = time.perf_counter()
             _, new_tables, affected = apply_batch(
                 pipe,
                 state,
@@ -158,23 +144,16 @@ def apply_change_rows(
                 frontier=frontier,
                 hint=hint,
             )
-            # plan construction + the engine's shared-frontier pins (the
-            # rebuilt rows themselves materialize under "tables")
-            stage_secs["rebuild"] = round(time.perf_counter() - t0, 3)
-            t0 = time.perf_counter()
             new_tables = _pin_all(new_tables)
-            stage_secs["tables"] = round(time.perf_counter() - t0, 3)
         finally:
             if expire_future is not None:
-                stage_secs["expire"] = expire_future.result()
+                expire_future.result()
     if gens is not None:
         # per-id gen refresh (T6) off the MATERIALIZED base tables
         from imposm3_spark.pipeline.generalize import refresh_generalized_tables
 
-        t0 = time.perf_counter()
         gens = _pin_all(refresh_generalized_tables(pipe.mapping, gens, new_tables, affected))
-        stage_secs["gens"] = round(time.perf_counter() - t0, 3)
-    return new_state, new_tables, gens, stage_secs
+    return new_state, new_tables, gens
 
 
 @dataclass
@@ -188,10 +167,6 @@ class ReplicationRunner:
     expire_dir: str | None = None
     expire_zoom: int = 14  # `-expiretiles-zoom` / config expiretiles_zoom
     gens: dict[str, DataFrame] | None = None  # generalized tables (T6)
-    # optional durable element state (diff/state_store.py): saved after
-    # every batch; `resume()` reloads it, so a restarted runner continues
-    # from last.state.txt with id-bucketed (shuffle-free-join) state
-    state_store: "object | None" = None
     # optional publish(state, tables): writes the batch's pinned output
     # before its sequence is checkpointed, so a killed runner restarts on
     # the data of every batch last.state.txt counts (`imposm3_spark run`)
@@ -200,9 +175,6 @@ class ReplicationRunner:
     # in diff_dir yet, fetch it from the remote feed first (`imposm run`
     # against a live replication endpoint, update/cmd.go:48-257)
     downloader: "object | None" = None
-    # per-stage walls of the most recent apply_one (observability only;
-    # nothing in the package reads them; for callers that log batches)
-    last_stage_secs: dict = field(default_factory=dict)
 
     def current_sequence(self) -> int:
         p = Path(self.state_file)
@@ -216,46 +188,25 @@ class ReplicationRunner:
         path = sequence_path(self.diff_dir, seq)
         if path is None:
             return False
-        t0 = time.perf_counter()
-        rows = read_osc_rows(path)
-        read_s = round(time.perf_counter() - t0, 3)
-        self.state, self.tables, self.gens, stage_secs = apply_change_rows(
+        self.state, self.tables, self.gens = apply_change_rows(
             self.spark,
             self.pipe,
             self.state,
             self.tables,
             self.gens,
-            rows,
+            read_osc_rows(path),
             self.expire_dir,
             self.expire_zoom,
         )
-        stage_secs = {"read": read_s, **stage_secs}
-        if self.state_store is not None:
-            # durable publish BEFORE the sequence checkpoint: a crash
-            # between the two replays the batch onto the already-updated
-            # state, which is idempotent (last-write-wins upsert)
-            t0 = time.perf_counter()
-            self.state_store.save(self.state)
-            self.state = self.state_store.load()
-            stage_secs["store"] = round(time.perf_counter() - t0, 3)
         if self.publish is not None:
-            t0 = time.perf_counter()
             self.publish(self.state, self.tables)
-            stage_secs["publish"] = round(time.perf_counter() - t0, 3)
         write_state_txt(self.state_file, seq)
-        self.last_stage_secs = stage_secs
         # drop the py4j handles of the replaced state/tables promptly so
         # the ContextCleaner can free their checkpoint blocks — without
         # this, round-11 probes measured 1-2.4 s of old-gen GC landing
         # inside the NEXT batch's table pins
         gc.collect()
         return True
-
-    def resume(self) -> None:
-        """Reload element state from the durable store (restart path)."""
-        if self.state_store is None:
-            raise ValueError("no state_store configured")
-        self.state = self.state_store.load()
 
     def run(self, max_batches: int | None = None, poll_interval: float = 0.0) -> int:
         """Consume sequences until none is available (or max_batches).
@@ -269,8 +220,8 @@ class ReplicationRunner:
             if self.downloader is not None and sequence_path(self.diff_dir, nxt) is None:
                 try:
                     self.downloader.fetch_sequence(nxt, max_tries=1)
-                except Exception:
-                    pass  # not published yet — fall through to poll/exit
+                except (NotAvailable, urllib.error.URLError, OSError):
+                    pass  # not published yet, or transient — fall through to poll/exit
             if not self.apply_one(nxt):
                 if poll_interval > 0:
                     time.sleep(poll_interval)

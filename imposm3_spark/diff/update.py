@@ -26,7 +26,7 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from imposm3_spark import elements as el
@@ -376,18 +376,18 @@ def expired_tile_list(
 
     # The match/prefilter Column trees are LARGE (every unit's match +
     # filter expression) and side-independent — build them once per
-    # ImportPipeline and reuse across sides AND batches. Column objects
-    # are unresolved expressions, freely reusable across DataFrames;
-    # rebuilding them per call cost ~10 s of py4j round-trips per batch.
-    exprs = getattr(pipe, "_expire_match_exprs", None)
-    if exprs is None:
+    # ImportPipeline (the engine's `_expr` cache) and reuse across sides
+    # AND batches. Column objects are unresolved expressions, freely
+    # reusable across DataFrames; rebuilding them per call cost ~10 s of
+    # py4j round-trips per batch.
+    def build() -> dict[str, Column]:
         closed = (F.size("refs") >= 4) & (
             F.try_element_at("refs", F.lit(1)) == F.try_element_at("refs", F.lit(-1))
         )
         area_tag = F.coalesce(F.col("tags").getItem("area"), F.lit(""))
         as_line = ~(closed & (area_tag == "yes"))
         as_poly = closed & (area_tag != "no")
-        exprs = {
+        return {
             "node_prefilter": tag_prefilter_expr(pipe.mapping, "node", F.col("tags")),
             "way_prefilter": tag_prefilter_expr(pipe.mapping, "way", F.col("tags")),
             "rel_prefilter": tag_prefilter_expr(
@@ -413,7 +413,8 @@ def expired_tile_list(
                 relation=True,
             ),
         }
-        pipe._expire_match_exprs = exprs
+
+    exprs = pipe._expr(("expire",), build)
 
     # hint=False (count-gated by the runner, round-10 ADVICE): catch-up
     # batches degrade to sort-merge instead of forcing a broadcast

@@ -34,11 +34,3 @@ def relation_osm_id(id_col: Column, single_id_space: bool) -> Column:
     if single_id_space:
         return F.lit(REL_ID_OFFSET) - id_col
     return -id_col
-
-
-def py_way_osm_id(way_id: int, single_id_space: bool) -> int:
-    return -way_id if single_id_space else way_id
-
-
-def py_relation_osm_id(rel_id: int, single_id_space: bool) -> int:
-    return REL_ID_OFFSET - rel_id if single_id_space else -rel_id

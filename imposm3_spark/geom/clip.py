@@ -90,9 +90,6 @@ class Limiter:
     def _boundary_rings(self) -> list[list[Coord]]:
         return [ring for poly in self.clip_polys for ring in poly]
 
-    def contains_all(self, coords: list[Coord]) -> bool:
-        return all(self.intersects_point(x, y) for x, y in coords)
-
     def _inside_exact(self, x: float, y: float) -> bool:
         """Containment against the EXACT region (no buffer) — the clip
         operators use this; the buffer applies only to the F8 point

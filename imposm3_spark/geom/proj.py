@@ -38,16 +38,6 @@ def merc_to_wgs_lat(y: Column) -> Column:
     )
 
 
-def webmerc_area_factor(mid_y: Column) -> Column:
-    """cos^2 of the WGS latitude of a mercator y — the webmerc_area correction.
-
-    Parity: mapping/columns.go:151-169 (webmercArea): the raw mercator area is
-    scaled by cos(lat)^2 at the bbox midpoint latitude.
-    """
-    lat = (F.atan(F.exp(mid_y * F.lit(math.pi / POLE))) * F.lit(2.0) - F.lit(math.pi / 2.0))
-    return F.pow(F.cos(lat), F.lit(2.0))
-
-
 COORD_FACTOR = 11930464.7083  # ((2<<31)-1)/360.0 — cache/binary/serialize.go:5
 
 

@@ -18,10 +18,10 @@ The builder receives a RowContext describing where the inputs live:
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pandas as pd
-from typing import Any, Callable
+from typing import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -66,10 +66,6 @@ def register(name: str) -> Callable[[Builder], Builder]:
         return fn
 
     return deco
-
-
-def available_column_types() -> list[str]:
-    return sorted(_REGISTRY)
 
 
 def build_column(cfg: ColumnCfg, ctx: RowContext) -> Column:
@@ -430,32 +426,3 @@ def _geojson_intersects_feature(cfg: ColumnCfg, ctx: RowContext) -> Column:
     features = _load_intersection_features(cfg)
     return _make_intersects_udf(features, prop)(ctx.geom_wkb)
 
-
-SPARK_TYPE_BY_COLUMN_TYPE: dict[str, str] = {
-    # database/postgis/columns.go:69-79 Go->PG mapping, re-expressed in Spark
-    "bool": "boolean",
-    "boolint": "tinyint",
-    "id": "bigint",
-    "string": "string",
-    "direction": "tinyint",
-    "integer": "int",
-    "mapping_key": "string",
-    "mapping_value": "string",
-    "member_id": "bigint",
-    "member_role": "string",
-    "member_type": "tinyint",
-    "member_index": "int",
-    "geometry": "binary",
-    "validated_geometry": "binary",
-    "hstore_tags": "string",
-    "wayzorder": "int",
-    "pseudoarea": "float",
-    "area": "float",
-    "webmerc_area": "float",
-    "zorder": "int",
-    "enumerate": "int",
-    "string_suffixreplace": "string",
-    "categorize_int": "int",
-    "geojson_intersects": "boolean",
-    "geojson_intersects_feature": "string",
-}

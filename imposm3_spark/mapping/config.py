@@ -189,9 +189,6 @@ class Mapping:
             single_id_space=bool(raw.get("use_single_id_space", False)),
         )
 
-    def tables_of_type(self, *types: str) -> list[Table]:
-        return [t for t in self.tables.values() if t.type in types]
-
 
 def load_mapping(path: str | Path) -> Mapping:
     """Load a mapping from YAML (.yml/.yaml) or JSON (.json) file."""

@@ -13,10 +13,9 @@ PostGIS payload.
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from imposm3_spark import elements
@@ -161,14 +160,6 @@ def _assemble_multipolygons(max_ring_gap: float, srid: int, limiter=None):
     return assemble
 
 
-@dataclass
-class PipelineOutput:
-    tables: dict[str, DataFrame]
-
-    def union_all(self) -> dict[str, DataFrame]:
-        return self.tables
-
-
 class ImportPipeline:
     """Compile a Mapping once, then run element DataFrames through it.
 
@@ -176,10 +167,7 @@ class ImportPipeline:
     the scan (writer/writer.go NodesToSrid); 4326 keeps lon/lat.
     """
 
-    def __init__(
-        self, mapping: Mapping, srid: int = 3857, limiter=None,
-        materialize_shared: bool = True,
-    ):
+    def __init__(self, mapping: Mapping, srid: int = 3857, limiter=None):
         if srid not in (3857, 4326):
             raise ValueError("only EPSG:3857 and EPSG:4326 are supported")  # config.go:156-160
         self.mapping = mapping
@@ -189,11 +177,10 @@ class ImportPipeline:
         # Spark does no cross-branch common-subplan reuse, so without
         # pinning, the J1-J3 joins and the G4/G5 assembly UDF re-execute
         # once PER TABLE per action — a T× blowup that only grows with the
-        # mapping. materialize_shared pins those frontiers with a lazy
-        # localCheckpoint (computed on first use, reused by every branch) —
-        # the Spark expression of the reference's stream-once/route-rows
-        # writer (writer/ways.go, writer/relations.go).
-        self.materialize_shared = materialize_shared
+        # mapping. _pin pins those frontiers with a lazy localCheckpoint
+        # (computed on first use, reused by every branch) — the Spark
+        # expression of the reference's stream-once/route-rows writer
+        # (writer/ways.go, writer/relations.go).
         # optional limit-to region (geom/clip.Limiter): F8 point filter +
         # J6 geometry clip. Pickled into UDF closures (small polygon set),
         # the Spark analog of the reference's per-worker prepared geoms.
@@ -211,9 +198,7 @@ class ImportPipeline:
     def _pin(self, df: DataFrame) -> DataFrame:
         """Materialize a shared frontier once (lazy local checkpoint) so
         per-table branches reuse it instead of recomputing its plan."""
-        if self.materialize_shared:
-            return df.localCheckpoint(eager=False)
-        return df
+        return df.localCheckpoint(eager=False)
 
     def project_xy(self, df: DataFrame, lon: str = "lon", lat: str = "lat") -> DataFrame:
         # every coordinate passes through the reference's uint32 cache
@@ -407,10 +392,10 @@ class ImportPipeline:
         seconds of py4j round-trips per *_tables() call. That is invisible
         on a one-shot import but dominates the diff loop, which calls the
         four table builders once PER BATCH (round-10 benchdiff stage
-        forensics — same finding as expired_tiles_for_batch's match-expr
-        memoization). Column objects are unresolved, immutable expressions,
-        freely reusable across DataFrames, so each site builds its trees
-        once per pipeline and replays them for every subsequent batch."""
+        forensics; expiry's match trees are cached here too). Column
+        objects are unresolved, immutable expressions, freely reusable
+        across DataFrames, so each site builds its trees once per pipeline
+        and replays them for every subsequent batch."""
         cache = self.__dict__.setdefault("_expr_cache", {})
         if key not in cache:
             cache[key] = build()
@@ -512,7 +497,7 @@ class ImportPipeline:
 
         # resolve coords once for all matched ways (reference fills only on
         # match too — writer/ways.go:85-97)
-        resolved = resolve_way_coords(needed, coords, unique_ids=True)
+        resolved = resolve_way_coords(needed, coords)
         resolved = self._pin(
             resolved.withColumn("_coords", gb.dedup_coords(F.col("coords")))
         )
@@ -625,7 +610,7 @@ class ImportPipeline:
         distinct_ways = member_ways.select(
             F.col("way_id").alias("id"), F.col("way_refs").alias("refs")
         ).dropDuplicates(["id"])
-        way_coords = resolve_way_coords(distinct_ways, coords, keep_cols=["id"], unique_ids=True)
+        way_coords = resolve_way_coords(distinct_ways, coords, keep_cols=["id"])
         member_ways = self._pin(
             member_ways.join(way_coords.withColumnRenamed("id", "way_id"), on="way_id", how="left")
         )
@@ -697,8 +682,7 @@ class ImportPipeline:
     # ---- relation_member tables (writer/relations.go:216-283) ----
 
     def relation_member_tables(
-        self, relations: DataFrame, ways: DataFrame, nodes: DataFrame,
-        coords: DataFrame | None = None,
+        self, relations: DataFrame, ways: DataFrame, nodes: DataFrame, coords: DataFrame
     ) -> dict[str, DataFrame]:
         """One row per member of each matched relation.
 
@@ -731,11 +715,9 @@ class ImportPipeline:
             gb.point_wkb_udf(F.col("x"), F.col("y"), F.lit(self.srid)).alias("m_wkb"),
         )
         # way members (type 1): linestring geometry; needs >=2 deduped coords
-        if coords is None:
-            coords = self.prepare_coords(nodes)
-        way_coords = resolve_way_coords(
-            ways.select("id", "refs"), coords, unique_ids=True
-        ).withColumn("_coords", gb.dedup_coords(F.col("coords")))
+        way_coords = resolve_way_coords(ways.select("id", "refs"), coords).withColumn(
+            "_coords", gb.dedup_coords(F.col("coords"))
+        )
         way_side = (
             ways.select(
                 F.col("id").alias("m_id"),
@@ -879,14 +861,3 @@ def _union_all(dfs: list[DataFrame]) -> DataFrame:
     for df in dfs[1:]:
         out = out.unionByName(df)
     return out
-
-
-def read_osm_tables(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Read nodes/ways/relations parquet produced by sources.osm_xml."""
-    return (
-        spark.read.parquet(f"{path}/nodes.parquet"),
-        spark.read.parquet(f"{path}/ways.parquet"),
-        spark.read.parquet(f"{path}/relations.parquet"),
-    )

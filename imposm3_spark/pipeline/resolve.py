@@ -34,28 +34,19 @@ def resolve_way_coords(
     ways: DataFrame,
     coords: DataFrame,
     keep_cols: list[str] | None = None,
-    unique_ids: bool = False,
 ) -> DataFrame:
     """J1: attach `coords ARRAY<STRUCT<x,y>>` to each way, position-ordered.
 
     `coords` must have columns (id, x, y) — already projected to the target
     SRID. Ways with any unresolved ref are dropped (cache/delta.go:185-190).
 
-    ``unique_ids=True`` asserts each way id appears on exactly one input row
-    (true for the ways table itself; false for exploded relation members) —
-    it skips the dedup shuffle, and when no extra columns need re-attaching
-    the result is the aggregation output directly (saves the join-back
-    shuffle of the full ways table).
+    Each way id must appear on exactly one input row (callers pass a ways
+    table or its distinct ids), so no dedup shuffle is needed; when no
+    extra columns need re-attaching the result is the aggregation output
+    directly (saves the join-back shuffle of the full ways table).
     """
     keep_cols = keep_cols if keep_cols is not None else [c for c in ways.columns if c != "refs"]
-    distinct_ways = ways.select("id", "refs")
-    if not unique_ids:
-        # the same way id may appear on multiple input rows (e.g. a way
-        # shared by several relations) — resolve each distinct way once
-        distinct_ways = distinct_ways.dropDuplicates(["id"])
-    exploded = distinct_ways.select(
-        "id", F.posexplode("refs").alias("pos", "ref")
-    )
+    exploded = ways.select("id", F.posexplode("refs").alias("pos", "ref"))
     joined = exploded.join(
         coords.select(F.col("id").alias("ref"), "x", "y"), on="ref", how="left"
     )
@@ -69,7 +60,6 @@ def resolve_way_coords(
     complete = agg.filter(F.col("_n_refs") == F.col("_n_resolved")).select(
         "id", F.transform("_pts", lambda p: p["c"]).alias("coords")
     )
-    if unique_ids and not [c for c in keep_cols if c != "id"]:
+    if not [c for c in keep_cols if c != "id"]:
         return complete
     return ways.select("id", *[c for c in keep_cols if c != "id"]).join(complete, on="id", how="inner")
-

@@ -91,9 +91,3 @@ def get_spark(app_name: str = "imposm3-spark", master: str | None = None,
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     return builder.getOrCreate()
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -32,7 +32,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-from imposm3_spark.mapping.columns import SPARK_TYPE_BY_COLUMN_TYPE
 from imposm3_spark.mapping.config import Mapping, Table
 
 try:  # pragma: no cover - psycopg2 not in the test image
@@ -228,13 +227,6 @@ def psql_execute(dsn: str, stmts: list[str]) -> None:
     _psql(dsn, ";\n".join(stmts) + ";\n")
 
 
-def psql_copy(dsn: str, copy_sql: str, payload_lines: Iterable[str]) -> None:
-    """COPY FROM STDIN via psql: the script embeds the payload followed by
-    the end-of-data marker (the same frame pg_dump emits)."""
-    body = "".join(payload_lines)
-    _psql(dsn, f"{copy_sql};\n{body}\\.\n")
-
-
 def psql_copy_stream(dsn: str, copy_sql: str, payload_lines: Iterable[str]) -> None:
     """COPY an arbitrarily large payload through ONE psql process inside ONE
     transaction: BEGIN / COPY FROM STDIN (stdin fed incrementally, bounded
@@ -391,21 +383,12 @@ def write_sync_batch(
         conn.close()
 
 
-def write_jdbc(df: DataFrame, table: Table, cfg: PostGISConfig, jdbc_url: str,
-               properties: dict | None = None) -> None:
-    """JDBC fallback writer (no psycopg2 needed; geometry as bytea WKB —
-    cast to geometry server-side afterwards)."""
-    df.write.mode("append").jdbc(
-        jdbc_url, f"{cfg.schema_import}.{cfg.prefix}{table.name}", properties=properties or {}
-    )
-
-
 # concurrent parquet table writes; each is one Spark job, so a handful is
 # enough to keep the scheduler busy without one thread per table
 _MAX_CONCURRENT_WRITES = 8
 
 
-def write_parquet(tables: dict[str, DataFrame], path: str, mode: str = "overwrite") -> None:
+def write_parquet(tables: dict[str, DataFrame], path: str) -> None:
     """Parquet sink for offline pipelines: one directory per output table.
 
     The per-table writes are independent jobs, each too small to fill the
@@ -416,7 +399,7 @@ def write_parquet(tables: dict[str, DataFrame], path: str, mode: str = "overwrit
         return
     with ThreadPoolExecutor(max_workers=min(len(tables), _MAX_CONCURRENT_WRITES)) as pool:
         futures = [
-            pool.submit(df.write.mode(mode).parquet, f"{path}/{name}")
+            pool.submit(df.write.mode("overwrite").parquet, f"{path}/{name}")
             for name, df in tables.items()
         ]
     # leaving the pool waited for every write

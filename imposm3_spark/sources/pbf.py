@@ -288,12 +288,6 @@ def _decode_dense_nodes(
         )
 
 
-def _decode_tags(fields: dict, st: list[str]) -> dict[str, str]:
-    keys = fields.get(2, [])
-    vals = fields.get(3, [])
-    return {st[k]: st[v] for k, v in zip(keys, vals)}
-
-
 def _decode_way(buf: bytes, st: list[str], date_gran: int = 1000):
     wid = 0
     keys: list[int] = []

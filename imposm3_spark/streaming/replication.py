@@ -69,7 +69,7 @@ class StreamingReplicator:
             rows.extend(parse_osc_rows(ET.fromstring(text), pos_offset=len(rows)))
         if not rows:
             return
-        self.state, self.tables, self.gens, _ = apply_change_rows(
+        self.state, self.tables, self.gens = apply_change_rows(
             self.spark, self.pipe, self.state, self.tables, self.gens, rows, self.expire_dir
         )
         self.batches_applied += 1

@@ -117,7 +117,7 @@ def test_no_cartesian_product(plans, name):
 
 def test_way_resolve_single_wide_shuffle(plans):
     """J1's exploded-refs aggregation is THE planet-scale shuffle; the
-    unique_ids fast path must keep the exchange count minimal (explode →
+    one-row-per-id fast path must keep the exchange count minimal (explode →
     agg → completeness filter, plus the fixture's own groupBy). A
     regression that reintroduces dropDuplicates or a join-back shows up
     as extra exchanges."""

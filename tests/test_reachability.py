@@ -1,11 +1,13 @@
 """Every package module is reached from an entry point, not only from its
-tests.
+tests, and every package function is named somewhere.
 
 Walks the ``import`` statements (including those inside functions) from
 the CLI, ``python -m imposm3_spark``, the query registry
 (``__spark_entry__.py``), ``bench.py`` and the ``perfbench/`` modules. A
 module that none of them reaches is code that only its own tests run:
-give it an entry point or delete it. Spark-free; parses source only.
+give it an entry point or delete it. A top-level function, class or
+method whose name no Python file in the repo mentions is code nothing
+runs. Spark-free; parses source only.
 """
 
 from __future__ import annotations
@@ -26,7 +28,6 @@ ROOTS = [
 ALLOWED = {
     f"{PKG}.streaming": "public streaming form of `imposm run` (docs/API.md)",
     f"{PKG}.streaming.replication": "StreamingReplicator (docs/API.md)",
-    f"{PKG}.diff.state_store": "the ReplicationRunner.state_store hook",
 }
 
 
@@ -94,3 +95,54 @@ def test_allowlist_names_existing_unreached_modules():
     reached = _reached(modules)
     assert set(ALLOWED) <= set(modules), sorted(set(ALLOWED) - set(modules))
     assert not set(ALLOWED) & reached, sorted(set(ALLOWED) & reached)
+
+
+def _repo_sources() -> list[Path]:
+    return [
+        p for p in REPO.rglob("*.py")
+        if not any(part.startswith(".") for part in p.relative_to(REPO).parts)
+    ]
+
+
+def _is_registered(node) -> bool:
+    """`@register(...)`-decorated definitions are reached through a
+    registry lookup, not by name."""
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+        for d in node.decorator_list
+    )
+
+
+def test_every_package_function_is_named():
+    """Names count as references when they appear as a variable, an
+    attribute, an import alias or a string that is an identifier (a
+    `getattr` target, a monkeypatch name) in any Python file. Dunder
+    methods are called by the language and are skipped."""
+    defs = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    named: set[str] = set()
+    unnamed = []
+    for path in _repo_sources():
+        tree = ast.parse(path.read_text(), str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                named.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                named.add(node.attr)
+            elif isinstance(node, ast.alias):
+                named.add(node.name.rsplit(".", 1)[-1])
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if node.value.isidentifier():
+                    named.add(node.value)
+        if path.relative_to(REPO).parts[0] != PKG:
+            continue
+        for top in tree.body:
+            members = top.body if isinstance(top, ast.ClassDef) else []
+            for node in (top, *members):
+                if (
+                    isinstance(node, defs)
+                    and not (node.name.startswith("__") and node.name.endswith("__"))
+                    and not _is_registered(node)
+                ):
+                    unnamed.append((f"{path.relative_to(REPO)}:{node.lineno}", node.name))
+    unused = sorted(f"{where} {name}" for where, name in unnamed if name not in named)
+    assert not unused, "package definitions nothing names: " + ", ".join(unused)

@@ -153,9 +153,10 @@ def _exchange_count(df) -> int:
     return len(re.findall(r"\b(?:Broadcast)?Exchange\b", plan))
 
 
-def test_unpinned_plan_resolves_members_once(frames):
+def test_unpinned_plan_resolves_members_once(frames, monkeypatch):
     nodes, ways, rels = frames
-    pipe = ImportPipeline(load_mapping_str(MAPPING), materialize_shared=False)
+    monkeypatch.setattr(ImportPipeline, "_pin", lambda self, df: df)
+    pipe = ImportPipeline(load_mapping_str(MAPPING))
     out = pipe.relation_tables(rels, ways, pipe.prepare_coords(nodes))
     assert _exchange_count(out["landuse"]) <= 12
     assert _exchange_count(out["routes"]) <= 10

@@ -165,3 +165,39 @@ def test_runner_drains_remote_endpoint(spark, tmp_path, http_remote):
     assert len(rows) == 1 and rows[0]["name"] == "new name"
     # nothing new published -> no-op, state unchanged
     assert runner.run() == 0
+
+
+class _RaisingDownloader:
+    def __init__(self, exc: Exception):
+        self.exc = exc
+
+    def fetch_sequence(self, seq, max_tries=None):
+        raise self.exc
+
+
+def _offline_runner(tmp_path, exc):
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    return ReplicationRunner(
+        spark=None,
+        pipe=None,
+        state=None,
+        tables={},
+        diff_dir=str(landing),
+        state_file=str(tmp_path / "last.state.txt"),
+        downloader=_RaisingDownloader(exc),
+    )
+
+
+def test_runner_treats_unpublished_sequence_as_no_new_batch(tmp_path):
+    runner = _offline_runner(tmp_path, NotAvailable("file:///feed/000/000/001.osc.gz"))
+    assert runner.run() == 0
+    assert runner.current_sequence() == 0
+
+
+def test_runner_propagates_downloader_bugs(tmp_path):
+    """Only 'not yet published' and transport errors mean 'no new
+    sequence'; any other error from the feed path surfaces."""
+    runner = _offline_runner(tmp_path, ValueError("bad sequence path"))
+    with pytest.raises(ValueError, match="bad sequence path"):
+        runner.run()
