@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -33,7 +34,8 @@ from imposm3_spark import elements as el
 from imposm3_spark.datapipe.text import eval_once
 from imposm3_spark.diff import refindex as ri
 from imposm3_spark.expire.tiles import TileExpireList
-from imposm3_spark.pipeline.engine import ImportPipeline, _union_all
+from imposm3_spark.geom import build as gb
+from imposm3_spark.pipeline.engine import ImportPipeline
 
 
 @dataclass
@@ -265,57 +267,6 @@ def rebuild_tables(
     )
 
 
-def _resolve_latlon(ways: DataFrame, nodes: DataFrame, keep_cols: list[str]) -> DataFrame:
-    """Attach lon/lat coord arrays to ways, position-ordered. Unresolvable
-    refs become (0,0) placeholder nodes — the tile expiry skips them,
-    exactly like the reference's partially-filled ways (tilelist.go
-    skip-empty-node checks).
-
-    Join shape: `ways` is a diff-batch blast radius (small); `nodes` is
-    the FULL element state. A direct left join would sort-merge — i.e.
-    shuffle the entire node table per call (4 calls per batch). Instead
-    the node side is pruned with a broadcast semi join on the referenced
-    ids (one scan of state, no exchange), and the pruned set — bounded by
-    the frontier ways' total ref count — broadcasts into the outer join.
-    `ways` is pinned on entry: it is referenced three times below (the
-    explode, the ref-id prune, the final join), and its upstream subtree
-    (frontier semi join + the giant match predicates, which Catalyst
-    pushes below the join onto the full way table) must execute once, not
-    per reference."""
-    # LAZY pin: all three references below land inside the caller's single
-    # expiry-union action, so a lazy checkpoint keeps the compute-once
-    # semantics without a dedicated scheduler job per call (4 calls per
-    # diff batch). Warm in-JVM alternating A/B, 3 rounds at 32 Monaco
-    # replicas: lazy won every round, wall medians 85.5 s vs 96.9 s for
-    # 2x500-change batches (round-10).
-    ways = ways.localCheckpoint(eager=False)
-    ex = ways.select("id", "refs").dropDuplicates(["id"]).select(
-        "id", F.posexplode("refs").alias("pos", "ref")
-    )
-    ref_ids = ex.select(F.col("ref").alias("id")).distinct()
-    needed = nodes.join(F.broadcast(ref_ids), "id", "leftsemi")
-    j = ex.join(
-        F.broadcast(needed.select(F.col("id").alias("ref"), "lon", "lat")), "ref", "left"
-    )
-    agg = j.groupBy("id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    "pos",
-                    F.struct(
-                        F.coalesce("lon", F.lit(0.0)).alias("lon"),
-                        F.coalesce("lat", F.lit(0.0)).alias("lat"),
-                    ).alias("c"),
-                )
-            )
-        ).alias("_pts")
-    )
-    resolved = agg.select("id", F.transform("_pts", lambda p: p["c"]).alias("coords"))
-    return ways.select("id", *[c for c in keep_cols if c != "id"]).join(
-        resolved, "id", "inner"
-    )
-
-
 def _match_after_prune(df: DataFrame, cond) -> DataFrame:
     """Filter ``df`` by the (expensive) mapping-match predicate WITHOUT
     letting Catalyst push it below the frontier semi join.
@@ -325,11 +276,10 @@ def _match_after_prune(df: DataFrame, cond) -> DataFrame:
     state), then filter by the mapping match expression — a tree holding
     every unit's match + table filter. Pushed below the join (the default
     for a deterministic filter), that tree evaluates over the ENTIRE
-    state per branch per batch: round-10 probe measured the four
-    _resolve_latlon constructions at 11-14 s/batch, almost all of it
-    full-table match evaluation. The eval_once guard bars the
-    substitution, so the semi join runs first and the match tree touches
-    only blast-radius rows."""
+    state per branch per batch: a round-10 probe measured the expiry
+    branches at 11-14 s/batch, almost all of it full-table match
+    evaluation. The eval_once guard bars the substitution, so the semi
+    join runs first and the match tree touches only blast-radius rows."""
     flag = "_match_keep"
     return df.withColumn(flag, eval_once(cond)).filter(F.col(flag)).drop(flag)
 
@@ -368,10 +318,15 @@ def expired_tile_list(
       closed=true (writer/relations.go:127-131)
 
     The touched geometries (blast-radius-sized: ~900 for a 500-change
-    batch) are collected in one action and tiled on the driver into a
-    TileExpireList; `flush` writes the file sink (S14). Tiling them in a
-    pandas UDF with an explode + distinct took ~8x longer for the same
-    tiles: the Python worker round trip dominates at this size."""
+    batch) and the coordinates of their refs are collected in one action
+    and tiled on the driver into a TileExpireList; `flush` writes the file
+    sink (S14). Refs resolve by a dict lookup per side, as the reference
+    expires from the node coordinates it already holds; a ref missing from
+    the node state becomes the (0, 0) placeholder that the tiling skips,
+    like the reference's partially-filled ways (tilelist.go skip-empty-node
+    checks). Tiling them in a pandas UDF with an explode + distinct took
+    ~8x longer for the same tiles: the Python worker round trip dominates
+    at this size."""
     from imposm3_spark.mapping.matcher import tag_prefilter_expr
 
     # The match/prefilter Column trees are LARGE (every unit's match +
@@ -381,12 +336,7 @@ def expired_tile_list(
     # reusable across DataFrames; rebuilding them per call cost ~10 s of
     # py4j round-trips per batch.
     def build() -> dict[str, Column]:
-        closed = (F.size("refs") >= 4) & (
-            F.try_element_at("refs", F.lit(1)) == F.try_element_at("refs", F.lit(-1))
-        )
-        area_tag = F.coalesce(F.col("tags").getItem("area"), F.lit(""))
-        as_line = ~(closed & (area_tag == "yes"))
-        as_poly = closed & (area_tag != "no")
+        closed, as_line, as_poly = gb.way_dispatch(F.col("refs"), F.col("tags"))
         return {
             "node_prefilter": tag_prefilter_expr(pipe.mapping, "node", F.col("tags")),
             "way_prefilter": tag_prefilter_expr(pipe.mapping, "way", F.col("tags")),
@@ -421,13 +371,7 @@ def expired_tile_list(
     maybe_bcast = (lambda d: F.broadcast(d)) if hint else (lambda d: d)
     parts = []
     for st, is_new in ((state, False), (new_state, True)):
-        all_nodes = st.nodes.select("id", "lon", "lat")
-
-        # Pin discipline: the way sets are pinned inside _resolve_latlon
-        # (multiply-referenced there); nodes/relations are consumed
-        # exactly once each, and the geoms union at the end is collected
-        # in one action — pinning them here would only add a job of fixed
-        # overhead per branch.
+        side = F.lit(is_new).alias("side")
 
         # nodes (deleter.go:206-238; writer/nodes.go:91-92)
         nd = (
@@ -435,16 +379,9 @@ def expired_tile_list(
             .filter(F.size("tags") > 0)
             .withColumn("tags", exprs["node_prefilter"])
         )
-        nd = _match_after_prune(nd, exprs["node_m"])
-        parts.append(
-            nd.select(
-                F.array(F.struct(F.col("lon"), F.col("lat"))).alias("coords"),
-                F.lit(False).alias("closed"),
-            )
-        )
+        parts.append(_match_after_prune(nd, exprs["node_m"]).select(side, "lon", "lat"))
 
-        # ways (deleter.go:159-204; writer/ways.go:122-123) — pinned
-        # inside _resolve_latlon
+        # ways (deleter.go:159-204; writer/ways.go:122-123)
         wy = (
             st.ways.join(maybe_bcast(frontier.way_ids), "id", "leftsemi")
             .filter(F.size("tags") > 0)
@@ -458,11 +395,6 @@ def expired_tile_list(
                 "_poly_m": eval_once(exprs["poly_m"]),
             }
         ).filter(F.col("_line_m") | F.col("_poly_m"))
-        parts.append(
-            _resolve_latlon(wy, all_nodes, keep_cols=["_poly_m"]).select(
-                "coords", F.col("_poly_m").alias("closed")
-            )
-        )
 
         # relations: every way member's node run (deleter.go:136-155;
         # writer/relations.go:127-131)
@@ -477,28 +409,41 @@ def expired_tile_list(
             # frontier semi join
             F.col("_poly_m") | exprs["rother_m"]
         )
-        # member side is blast-radius-sized — broadcast it so the full
-        # way table scans once without an exchange
         members = (
             rl.select("_poly_m", F.explode("members").alias("m"))
             .filter(F.col("m.type") == 1)
-            .select(F.col("m.id").alias("way_id"), "_poly_m")
+            .select(F.col("m.id").alias("id"), "_poly_m")
         )
-        member_ways = (
-            st.ways.select(F.col("id").alias("way_id"), "refs")
-            .join(F.broadcast(members), "way_id", "inner")
-            .select(F.col("way_id").alias("id"), "refs", "_poly_m")
-        )
+        # a member way missing from the state is dropped (inner join)
+        member_ways = st.ways.select("id", "refs").join(maybe_bcast(members), "id", "inner")
         rel_closed = F.lit(True) if is_new else F.col("_poly_m")
-        parts.append(
-            _resolve_latlon(member_ways, all_nodes, keep_cols=["_poly_m"]).select(
-                "coords", rel_closed.alias("closed")
-            )
-        )
 
+        # LAZY pin: the geometries are read twice (their refs prune the
+        # node state, and the union below), both inside the one collect,
+        # so a lazy pin computes them once without a job of its own
+        geoms = (
+            wy.select(side, "refs", F.col("_poly_m").alias("closed"))
+            .unionByName(member_ways.select(side, "refs", rel_closed.alias("closed")))
+            .localCheckpoint(eager=False)
+        )
+        ref_ids = geoms.select(F.explode("refs").alias("id"))
+        ref_nodes = st.nodes.join(maybe_bcast(ref_ids), "id", "leftsemi")
+        parts += [geoms, ref_nodes.select(side, "id", "lon", "lat")]
+
+    # one schema for both sides: points (side, lon, lat), geometries
+    # (side, refs, closed) and ref coordinates (side, id, lon, lat)
+    rows = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts).collect()
+    coords: dict[bool, dict[int, tuple]] = {False: {}, True: {}}
+    for row in rows:
+        if row["id"] is not None:
+            coords[row["side"]][row["id"]] = (row["lon"], row["lat"])
     tiles = TileExpireList(max_zoom=max_zoom)
-    for row in _union_all(parts).collect():
-        tiles.expire_nodes([(c[0], c[1]) for c in row["coords"] or ()], bool(row["closed"]))
+    for row in rows:
+        if row["refs"] is not None:
+            lut = coords[row["side"]]
+            tiles.expire_nodes([lut.get(r, (0.0, 0.0)) for r in row["refs"]], bool(row["closed"]))
+        elif row["id"] is None:
+            tiles.expire_nodes([(row["lon"], row["lat"])], False)
     return tiles
 
 

@@ -86,6 +86,15 @@ def is_closed_refs(refs: Column) -> Column:
     return (F.size(refs) >= 4) & (F.try_element_at(refs, F.lit(1)) == F.try_element_at(refs, F.lit(-1)))
 
 
+def way_dispatch(refs: Column, tags: Column) -> tuple[Column, Column, Column]:
+    """(closed, as_line, as_poly) of a way (mapping/matcher.go:137-155):
+    line tables take open ways always and closed ways unless area=yes;
+    polygon tables take closed ways unless area=no."""
+    closed = is_closed_refs(refs)
+    area_tag = F.coalesce(tags.getItem("area"), F.lit(""))
+    return closed, ~(closed & (area_tag == "yes")), closed & (area_tag != "no")
+
+
 def valid_linestring(arr: Column) -> Column:
     """>=2 distinct-consecutive nodes (geom.go:81-85)."""
     return F.size(arr) >= 2

@@ -468,9 +468,7 @@ class ImportPipeline:
         """Ways -> linestring + polygon tables.
 
         coords: (id, x, y) already projected (use `prepare_coords`).
-        Dispatch (mapping/matcher.go:137-155): line tables take open ways
-        always and closed ways unless area=yes; polygon tables take closed
-        ways unless area=no.
+        Line/polygon dispatch: `gb.way_dispatch`.
         """
         line_units = self.line_units
         poly_units = self.polygon_units
@@ -478,10 +476,8 @@ class ImportPipeline:
             return {}
         df = ways.filter(F.size("tags") > 0).withColumn("tags", self._prefilter("way"))
         df = df.filter(F.size("tags") > 0)
-        df = df.withColumn("_closed", gb.is_closed_refs(F.col("refs")))
-        area_tag = F.coalesce(F.col("tags").getItem("area"), F.lit(""))
-        df = df.withColumn("_as_line", ~(F.col("_closed") & (area_tag == "yes")))
-        df = df.withColumn("_as_poly", F.col("_closed") & (area_tag != "no"))
+        closed, as_line, as_poly = gb.way_dispatch(F.col("refs"), F.col("tags"))
+        df = df.withColumns({"_closed": closed, "_as_line": as_line, "_as_poly": as_poly})
 
         all_units = line_units + poly_units
         df = self._with_matches(df, all_units, "way")
@@ -596,10 +592,15 @@ class ImportPipeline:
         # or has an unresolvable ref (cache/ways.go:99-114). Relations with
         # zero way members (e.g. route masters) have no rows here and stay
         # complete.
+        # _poly_m: matched by a polygon table, so the multipolygon kernel
+        # needs its members (a relation only a `type: relation` table
+        # matches, e.g. a route, never reaches the kernel)
         members = needed.select(
-            F.col("id").alias("rel_id"), F.posexplode("members").alias("member_pos", "member")
+            F.col("id").alias("rel_id"),
+            self._any_match(poly_units, "rel_poly").alias("_poly_m"),
+            F.posexplode("members").alias("member_pos", "member"),
         ).filter(F.col("member.type") == 1).select(
-            "rel_id", "member_pos", F.col("member.id").alias("way_id")
+            "rel_id", "member_pos", F.col("member.id").alias("way_id"), "_poly_m"
         )
         member_ways = members.join(
             ways.select(F.col("id").alias("way_id"), F.col("refs").alias("way_refs")),
@@ -620,7 +621,7 @@ class ImportPipeline:
         if poly_units:
             # the kernel returns no row for a relation with a NULL coords
             # member, so the inner join keeps complete relations only
-            assembled = member_ways.groupBy("rel_id").applyInPandas(
+            assembled = member_ways.filter("_poly_m").groupBy("rel_id").applyInPandas(
                 _assemble_multipolygons(self.max_ring_gap, self.srid, self.limiter),
                 MULTIPOLYGON_SCHEMA,
             )

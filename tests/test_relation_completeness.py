@@ -17,6 +17,7 @@ import math
 import re
 
 import pytest
+from pyspark.sql.group import GroupedData
 
 from imposm3_spark.mapping.config import load_mapping_str
 from imposm3_spark.pipeline.engine import ImportPipeline
@@ -145,6 +146,24 @@ def test_relation_rows_only_for_complete_relations(tables):
     assert set(tables["routes"]) == {-7, -9}
     assert tables["routes"][-7]["type"] == "bus"
     assert tables["routes"][-9]["type"] == "hiking"
+
+
+def test_relation_only_matches_skip_the_ring_kernel(frames, monkeypatch):
+    nodes, ways, rels = frames
+    kernel_inputs = []
+    apply = GroupedData.applyInPandas
+
+    def capture(self, func, schema):
+        kernel_inputs.append(self._df)
+        return apply(self, func, schema)
+
+    monkeypatch.setattr(GroupedData, "applyInPandas", capture)
+    pipe = ImportPipeline(load_mapping_str(MAPPING))
+    pipe.relation_tables(rels, ways, pipe.prepare_coords(nodes))
+    (grouped,) = kernel_inputs
+    # routes 7 and 8 have way members but only the `type: relation` table
+    # matches them; 6 and 9 have no way members
+    assert {r["rel_id"] for r in grouped.select("rel_id").distinct().collect()} == {1, 2, 3, 4, 5, 10}
 
 
 def _exchange_count(df) -> int:
